@@ -29,7 +29,8 @@ Scale notes (the 100 TB design point):
     on a real cluster, surviving executor loss mid-computation.
   * Near-dup components are dense (templated text collides everywhere),
     so diameters are tiny and rounds ~2-3 in practice; ``max_iter``
-    bounds the pathological chain.
+    bounds the pathological chain, and running out of rounds raises
+    instead of returning labels that have not converged.
 """
 
 from __future__ import annotations
@@ -58,7 +59,10 @@ def connected_components(
     and are not emitted (callers left-join and ``coalesce(cluster_id, id)``).
 
     Deterministic: the fixpoint (min reachable id) does not depend on
-    iteration order, partitioning, or the number of rounds taken.
+    iteration order, partitioning, or the number of rounds taken. The
+    distributed path raises ``RuntimeError`` when its last allowed round
+    (``max_iter``) still lowers labels; the check reuses that round's
+    convergence count, so it adds no job.
 
     ``checkpoint_dir`` selects the per-round lineage cut: ``None`` (local
     mode / tests) uses ``localCheckpoint`` — blocks live on executors, so
@@ -309,6 +313,14 @@ def connected_components(
                 changed = jumped.filter(F.col("label") < F.col("__old")).count()
                 if changed == 0:
                     break
+                if rnd == max_iter - 1:
+                    # labels still falling after the last allowed round are
+                    # not the component mins: fail rather than return them
+                    raise RuntimeError(
+                        f"connected_components did not converge in "
+                        f"max_iter={max_iter} rounds: the last round still "
+                        f"lowered {changed} labels"
+                    )
 
         return labels.select("id", F.col("label").alias("cluster_id"))
     finally:

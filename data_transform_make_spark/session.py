@@ -33,6 +33,19 @@ def get_spark(app_name: str = "data_transform_make_spark", cpus: int | None = No
         # sf0.1 the working set is well under 16g even with 32 tasks
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        # Spark caches compiled whole-stage-codegen classes in one JVM-wide
+        # LRU of 100 entries by default. The engine re-runs the same plans
+        # (every pass, every micro-batch) over a larger working set:
+        # ~290 classes per perfbench order_etl pass, ~130 per curation
+        # pass, 767 for all corpus queries at sf0.001 run by count() and
+        # 952 run by collect(). A 100-entry cache evicts them before reuse, so
+        # every pass recompiles all of them. 2000 leaves ~2x headroom over
+        # the corpus: AQE picks other join strategies at other data sizes,
+        # so the set of plan shapes differs by scale. Static conf, so it
+        # binds only sessions built here: a session created elsewhere
+        # (tools/driver_sim.py, an external driver) keeps the default of
+        # 100, and pin_session_conf cannot raise it at runtime.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # recursive CTEs (rc1): Spark caps ACCUMULATED recursive output at
         # 1M rows by default — a hierarchy query over a >1M-row table

@@ -575,7 +575,9 @@ def _checkpointed_state_pipeline(
         if os.path.exists(path):
             shutil.rmtree(path, ignore_errors=True)
         os.rename(tmp, path)
-        state["inventory"] = spark.read.parquet(path)
+        # pinned schema: the post-state's own schema is the file's schema,
+        # and inferring it again would launch a footer-read job per batch
+        state["inventory"] = spark.read.schema(post.schema).parquet(path)
         state["epoch_path"] = path
         if prev is not None and prev != path:
             # fully consumed by the write just completed

@@ -43,6 +43,15 @@ class TestConnectedComponents:
         got = _cc(spark, [(i, i + 1) for i in range(1, 30)], max_iter=8)
         assert got == {i: 1 for i in range(1, 31)}
 
+    def test_long_chain_out_of_rounds_raises(self, spark):
+        # a 64-node path needs more than 2 rounds: the distributed fixpoint
+        # must fail, not return labels that are still falling
+        df = spark.createDataFrame(
+            [(i, i + 1) for i in range(1, 64)], "id_a long, id_b long"
+        )
+        with pytest.raises(RuntimeError, match="did not converge in max_iter=2"):
+            connected_components(df, max_iter=2, small_graph_threshold=0)
+
     def test_reversed_and_duplicate_edges(self, spark):
         got = _cc(spark, [(2, 1), (1, 2), (2, 3), (2, 3)])
         assert got == {1: 1, 2: 1, 3: 1}
