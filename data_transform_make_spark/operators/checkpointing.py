@@ -1,101 +1,42 @@
-"""Shared eager lineage-cut helper (advice, round 9).
+"""The engine's one eager lineage-cut policy.
 
-``localCheckpoint`` stores blocks on EXECUTORS: the cut survives the
-session but not executor loss — on a real cluster a lost executor kills
-every consumer of the checkpointed frame. Operators that fold a shared
-projection into one pass (bm25_topk, ngram_jaccard_pairs) therefore
-accept a ``checkpoint_dir``: when given, the cut routes through reliable
-``DataFrame.checkpoint`` against that store path (HDFS/S3 in production)
-and survives executor loss at the cost of one distributed write.
+Operators that fold a shared projection into one pass (bm25_topk,
+ngram_jaccard_pairs, the training-corpus builders, minhash_lsh_pairs)
+and the connected-components fixpoint (once per round) cut lineage with
+an eager checkpoint. The session decides which kind:
 
-The session-global ``setCheckpointDir`` scoping protocol is the one
-``operators/graph.py`` (connected_components) established over rounds
-5-8 — same memo attributes (``_dtm_checkpoint_root``/``_set``), same
-save/exact-restore of a foreign pre-existing dir, same
-last-writer-wins exit when a concurrent caller flips the dir inside the
-call window — so the two modules compose: an eager_cut between two
-connected_components rounds (or vice versa) sees and honors the same
-memo instead of churning UUID subdirs.
+- the session has a checkpoint dir (``sc.getCheckpointDir()``; a
+  deployment sets it with Spark's ``spark.checkpoint.dir`` conf): a
+  reliable ``DataFrame.checkpoint`` into that store, which survives
+  executor loss at the cost of one distributed write per cut;
+- otherwise ``localCheckpoint``: blocks live on executors, so the cut is
+  fast but a lost executor kills every consumer of the cut frame.
+
+The engine only reads the session's checkpoint dir and never sets it,
+the convention of Spark MLlib's ``checkpointInterval`` and GraphFrames'
+connected components. Reliable checkpoint files are not deleted by
+default: set ``spark.cleaner.referenceTracking.cleanCheckpoints`` or use
+a TTL'd/job-scoped dir.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import DataFrame, SparkSession
 
 
-def _exact_restore(sc, restore_ckpt: str) -> str:
-    """Restore the session checkpoint dir to EXACTLY ``restore_ckpt``.
-
-    Returns the branch taken, for version pinning (verdict, round 10):
-
-    - ``"private-setter"`` — the Scala ``SparkContext.checkpointDir_$eq``
-      setter via py4j. Private API: a Spark minor-version bump could
-      remove or rename it, silently flipping every restore to the
-      fallback below and quietly changing restore semantics.
-      tests/test_checkpointing.py pins which branch runs on the current
-      Spark version so that flip is CAUGHT, not discovered in production.
-    - ``"public-fallback"`` — public ``setCheckpointDir(restore_ckpt)``.
-      Correct but inexact: the public API treats its argument as a ROOT
-      and mints a fresh UUID subdir under it, so a restored path drifts
-      one level deeper per save/restore cycle (restore_ckpt is already
-      the UUID'd path recorded from ``getCheckpointDir``).
-    """
-    try:
-        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
-            sc._jvm.scala.Option.apply(restore_ckpt)
-        )
-        return "private-setter"
-    except Exception:
-        sc.setCheckpointDir(restore_ckpt)
-        return "public-fallback"
+def lineage_cut(spark: SparkSession) -> Callable[[DataFrame], DataFrame]:
+    """The session's eager cut, chosen once: reading the checkpoint dir
+    is a py4j round trip, so an iterating caller takes the cut once per
+    call instead of re-reading the dir per round."""
+    if spark.sparkContext.getCheckpointDir() is None:
+        return lambda df: df.localCheckpoint(eager=True)
+    return lambda df: df.checkpoint(eager=True)
 
 
-def eager_cut(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
-    """Eagerly materialize ``df`` and cut its lineage.
-
-    ``checkpoint_dir=None`` (local mode / tests): ``localCheckpoint`` —
-    fast, executor-resident, does NOT survive executor loss. With a
-    reliable store path: ``DataFrame.checkpoint`` inside a scoped
-    ``setCheckpointDir`` window (saved and restored exactly as
-    ``connected_components`` does — see module docstring). Checkpoint
-    files are not auto-deleted — set
-    ``spark.cleaner.referenceTracking.cleanCheckpoints`` or use a
-    TTL'd/job-scoped path.
-    """
-    if checkpoint_dir is None:
-        return df.localCheckpoint(eager=True)
-    sc = df.sparkSession.sparkContext
-    memo_hit = (
-        getattr(sc, "_dtm_checkpoint_root", None) == checkpoint_dir
-        and sc.getCheckpointDir() == getattr(sc, "_dtm_checkpoint_set", None)
-    )
-    restore_ckpt: str | None = None
-    did_set = False
-    if not memo_hit:
-        restore_ckpt = sc.getCheckpointDir()
-        sc.setCheckpointDir(checkpoint_dir)
-        sc._dtm_checkpoint_root = checkpoint_dir
-        sc._dtm_checkpoint_set = sc.getCheckpointDir()
-        did_set = True
-    try:
-        # eager=True: the checkpoint files are fully written before any
-        # restore below, so a restored foreign dir never receives them
-        return df.checkpoint(eager=True)
-    finally:
-        if did_set:
-            if sc.getCheckpointDir() != getattr(sc, "_dtm_checkpoint_set", None):
-                # a concurrent caller flipped the session-global dir
-                # inside our window: last writer wins — leave the live
-                # dir, clear the memo so the next same-root call re-sets
-                sc._dtm_checkpoint_root = None
-                sc._dtm_checkpoint_set = None
-            elif restore_ckpt is not None:
-                # exact restore of the already-UUID'd path (public
-                # setCheckpointDir would mint a fresh subdir under it);
-                # branch pinned by tests/test_checkpointing.py
-                _exact_restore(sc, restore_ckpt)
-                sc._dtm_checkpoint_root = None
-                sc._dtm_checkpoint_set = None
-            # restore_ckpt None + no flip: leave our dir and memo in
-            # place — the next same-root call (or a following
-            # connected_components with the same root) skips the re-set
+def eager_cut(df: DataFrame) -> DataFrame:
+    """Eagerly materialize ``df`` and cut its lineage: reliable
+    ``checkpoint`` when the session has a checkpoint dir, else
+    ``localCheckpoint`` (see the module docstring)."""
+    return lineage_cut(df.sparkSession)(df)

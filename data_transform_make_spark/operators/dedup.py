@@ -535,7 +535,7 @@ def minhash_lsh_pairs(
     each recompute the full scan + 32-hash + groupBy subtree — measured
     slower than simply shipping the arrays through the band join. The
     persist's LIFETIME is scoped to this call: the (tiny) pair result is
-    eagerly materialized via ``localCheckpoint`` and the signature cache
+    eagerly cut (:func:`..checkpointing.eager_cut`) and the signature cache
     dropped before returning, so repeated calls over distinct inputs do
     NOT accumulate executor cache for the rest of the session (the
     CacheManager holds plan-keyed entries until unpersist; a long-lived
@@ -633,10 +633,11 @@ def minhash_lsh_pairs(
     if owns_cache:
         # materialize the (tiny) pair result, then release the signature
         # cache — lifetime of the intermediate == lifetime of this call.
-        # The checkpointed blocks belong to the RESULT and are reclaimed
-        # by the ContextCleaner when the returned frame is dropped; on a
-        # real cluster prefer the signatures= parquet-table path.
-        out = out.localCheckpoint(eager=True)
+        # The checkpointed blocks belong to the RESULT; local ones are
+        # reclaimed by the ContextCleaner when the returned frame is
+        # dropped. On a real cluster prefer the signatures= parquet-table
+        # path.
+        out = eager_cut(out)
         sig.unpersist()
     return out
 
@@ -758,7 +759,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     max_df: int | None = None,
     materialize: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity pairs >= threshold.
 
@@ -789,7 +789,7 @@ def ngram_jaccard_pairs(
     the cap. Default ``None`` = exact; per-doc set sizes are computed
     before the cap either way, so |A|/|B| stay exact.
 
-    ``materialize=True`` (default) eagerly ``localCheckpoint``s the
+    ``materialize=True`` (default) eagerly cuts the
     shingled projection — the bm25-class fold, round 9: the tokenize +
     shingle HOF subtree otherwise runs THREE times (once exploded for
     the posting lists, and the map-only ``sizes`` lineage once per
@@ -800,34 +800,22 @@ def ngram_jaccard_pairs(
     — so ``False`` keeps the fully-lazy recompute plan when executor
     storage is tighter than compute.
 
-    **Executor-loss caveat (advice, round 9):** the default cut is
-    ``localCheckpoint`` — executor-resident, so on a real cluster a
-    lost executor kills the job. Pass ``checkpoint_dir`` (HDFS/S3) to
-    route the cut through reliable ``DataFrame.checkpoint``
-    (:func:`..checkpointing.eager_cut`, the connected_components
-    scoping protocol), or ``materialize=False`` for recompute-on-loss
-    lineage. The two are mutually exclusive: ``checkpoint_dir`` is only
-    consumed by the ``materialize=True`` cut, so passing it alongside
-    ``materialize=False`` would checkpoint NOTHING while the caller
-    believes their lineage is reliably cut — refused loudly (advice,
-    round 10).
+    The cut follows the session's policy
+    (:func:`..checkpointing.eager_cut`): reliable ``DataFrame.checkpoint``
+    when the session has a checkpoint dir (set ``spark.checkpoint.dir``
+    on a cluster), else executor-resident ``localCheckpoint``, which a
+    lost executor takes down with it. ``materialize=False`` keeps
+    recompute-on-loss lineage instead.
     Returns (id_a, id_b, jaccard) with id_a < id_b.
     """
     _check_unit_threshold(threshold, "ngram_jaccard_pairs")
-    if checkpoint_dir is not None and not materialize:
-        raise ValueError(
-            "ngram_jaccard_pairs: checkpoint_dir was given but "
-            "materialize=False — nothing would be checkpointed; pass "
-            "materialize=True for a reliable cut or drop checkpoint_dir "
-            "for recompute-on-loss lineage"
-        )
     spread = _spread(df, id_col)
     proj = spread.select(
         F.col(id_col).alias("__id"),
         F.array_distinct(shingles(F.col(text_col), shingle_n)).alias("__arr"),
     )
     if materialize:
-        proj = eager_cut(proj, checkpoint_dir)
+        proj = eager_cut(proj)
     return ngram_jaccard_pairs_from_projection(proj, threshold, max_df)
 
 

@@ -23,10 +23,10 @@ Scale notes (the 100 TB design point):
     rows), and two id-keyed hash joins. No driver-side graph state; the
     only driver actions are the per-round convergence counts.
   * A checkpoint each round cuts lineage — without it round k re-derives
-    rounds 1..k-1 and the DAG grows quadratically. ``checkpoint_dir``
-    selects the flavor: ``localCheckpoint`` by default (local mode has no
-    HDFS), reliable ``DataFrame.checkpoint`` against the given store path
-    on a real cluster, surviving executor loss mid-computation.
+    rounds 1..k-1 and the DAG grows quadratically. The session picks the
+    flavor (operators/checkpointing.py): reliable ``DataFrame.checkpoint``
+    when it has a checkpoint dir, surviving executor loss mid-computation,
+    else ``localCheckpoint``.
   * Near-dup components are dense (templated text collides everywhere),
     so diameters are tiny and rounds ~2-3 in practice; ``max_iter``
     bounds the pathological chain, and running out of rounds raises
@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .checkpointing import _exact_restore
+from .checkpointing import lineage_cut
 
 
 def connected_components(
@@ -47,7 +47,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
-    checkpoint_dir: str | None = None,
     small_graph_threshold: int | None = 100_000,
 ) -> DataFrame:
     """Assign every vertex in the pair graph its component's min vertex id.
@@ -64,24 +63,14 @@ def connected_components(
     (``max_iter``) still lowers labels; the check reuses that round's
     convergence count, so it adds no job.
 
-    ``checkpoint_dir`` selects the per-round lineage cut: ``None`` (local
-    mode / tests) uses ``localCheckpoint`` — blocks live on executors, so
-    an executor loss past round 1 kills the job; on a real cluster pass a
-    reliable store path (HDFS/S3) and rounds checkpoint through
-    ``DataFrame.checkpoint`` instead, surviving executor loss at the cost
-    of one distributed write per round. Checkpoint files are not deleted
-    by default — set ``spark.cleaner.referenceTracking.cleanCheckpoints``
-    or point ``checkpoint_dir`` at a TTL'd/job-scoped path.
-
-    .. warning:: passing ``checkpoint_dir`` calls
-       ``sparkContext.setCheckpointDir`` — SESSION-GLOBAL state. The call
-       is scoped: a pre-existing checkpoint dir is saved and RESTORED on
-       exit (every per-round cut here is ``eager=True``, so our files are
-       fully written before the restore), and when no dir was set before,
-       ours is only applied when it differs from the last one this module
-       set. Residual hazard: two callers in concurrent threads of one
-       session still interleave inside the call window — namespace
-       per-job paths under one shared root if you need that.
+    Each distributed round cuts lineage eagerly under the session's
+    policy (:func:`..checkpointing.lineage_cut`, read once per call):
+    reliable ``DataFrame.checkpoint`` when the session has a checkpoint
+    dir (set ``spark.checkpoint.dir`` on a cluster), surviving executor
+    loss at the cost of one distributed write per round; otherwise
+    ``localCheckpoint``, whose blocks live on executors, so an executor
+    loss past round 1 kills the job. The session's checkpoint dir is
+    read, never set.
 
     ``small_graph_threshold``: near-dup pair graphs are usually TINY
     relative to the corpus that produced them (a curated corpus yields
@@ -105,70 +94,6 @@ def connected_components(
     vertex).
     """
     spark = pairs.sparkSession
-    restore_ckpt: str | None = None
-    if checkpoint_dir is not None:
-        sc = spark.sparkContext
-        # idempotence guard: setCheckpointDir mints a fresh UUID subdir per
-        # call, so the raw argument (not sc.getCheckpointDir, which returns
-        # the UUID'd path) is remembered to avoid churning directories on
-        # repeated calls with the same root. The memo alone is not enough
-        # (advice, round 7): a foreign setCheckpointDir between two calls
-        # with the same root would make a memo-only skip silently drop
-        # reliable checkpoints into the FOREIGN dir with nothing
-        # saved/restored — so the UUID'd path the last set produced is
-        # also remembered, and the skip requires the live
-        # sc.getCheckpointDir() to still equal it; on divergence we
-        # re-set and capture the foreign dir for restore like any other
-        # pre-existing dir.
-        memo_hit = (
-            getattr(sc, "_dtm_checkpoint_root", None) == checkpoint_dir
-            and sc.getCheckpointDir() == getattr(sc, "_dtm_checkpoint_set", None)
-        )
-        if not memo_hit:
-            # scope the session-global mutation (advice, rounds 5-6): a
-            # dir someone ELSE set is put back on exit — safe because
-            # every _cut below is eager, so our checkpoint files are on
-            # disk before the restore. (The UUID'd path is restored,
-            # which keeps the other caller's future checkpoints inside
-            # the directory they already own.)
-            restore_ckpt = sc.getCheckpointDir()
-            sc.setCheckpointDir(checkpoint_dir)
-            sc._dtm_checkpoint_root = checkpoint_dir
-            sc._dtm_checkpoint_set = sc.getCheckpointDir()
-
-    def _cut(df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
-    def _restore() -> None:
-        sc = spark.sparkContext
-        if checkpoint_dir is not None and sc.getCheckpointDir() != getattr(
-            sc, "_dtm_checkpoint_set", None
-        ):
-            # a CONCURRENT caller flipped the session-global dir
-            # MID-ITERATION (verdict, round 8). The race itself cannot be
-            # closed from here — setCheckpointDir is context-global and a
-            # flip can land between any per-round check and its cut (the
-            # cuts after the flip land in the foreign dir; they remain
-            # valid checkpoint data, so the RESULT is unaffected). What
-            # this exit path must not do is clobber the NEWER foreign set
-            # with the entry-time dir: last writer wins — leave the live
-            # dir in place and clear the memo so the next same-root call
-            # re-sets instead of trusting a stale skip.
-            sc._dtm_checkpoint_root = None
-            sc._dtm_checkpoint_set = None
-            return
-        if restore_ckpt is None:
-            return
-        # exact restore: put the saved (already UUID'd) path back as the
-        # Scala var itself; the public fallback would mint a fresh UUID
-        # subdir UNDER it. Shared with eager_cut, and the private-vs-
-        # fallback branch is version-pinned in tests/test_checkpointing.py.
-        _exact_restore(sc, restore_ckpt)
-        sc._dtm_checkpoint_root = None
-        sc._dtm_checkpoint_set = None
-
     e = edges = None
     try:
         # an edge with a NULL endpoint carries no adjacency information —
@@ -268,7 +193,8 @@ def connected_components(
                 F.least(F.col("u"), F.col("__mn")).alias("label"),
             )
         )
-        labels = _cut(labels)
+        cut = lineage_cut(spark)
+        labels = cut(labels)
         # the label init materialized `edges` through the raw-pair cache;
         # the raw frame has no further consumer
         e.unpersist()
@@ -299,7 +225,7 @@ def connected_components(
             jumped = stepped.join(lut, "label", "left").select(
                 "id", "__old", F.coalesce("__jump", "label").alias("label")
             )
-            jumped = _cut(jumped)
+            jumped = cut(jumped)
             labels = jumped.drop("__old")
             # Convergence check on even rounds only (and on the last): the
             # fixpoint is stable, so overshooting by one cheap round beats
@@ -333,4 +259,3 @@ def connected_components(
         for _df in (e, edges):
             if _df is not None:
                 _df.unpersist()
-        _restore()

@@ -28,8 +28,8 @@ Execution shape (the 100 TB design point):
     run ONCE (round 9: the r8 scaling table's 6.2× outlier profiled to
     exactly this doubled pass — the fold measured 5.55 s → 2.94 s at
     sf1.0, ratio 6.2× → ~3.5×, results bit-identical; SCALE.md "bm25
-    profile"). At 100 TB swap the local checkpoint for a reliable one
-    (or a Parquet round-trip) — ~40 bytes/doc either way.
+    profile"). The cut is reliable or executor-local by the session's
+    policy (operators/checkpointing.py) — ~40 bytes/doc either way.
   * The per-document score is a FIXED expression tree (terms folded
     left-to-right in ``query_terms`` order), not a shuffled SUM — float
     addition order is pinned, so the score is reproducible under any
@@ -59,7 +59,6 @@ def bm25_topk(
     k1: float = 1.2,
     b: float = 0.75,
     materialize: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Top-``k`` documents by rational-idf BM25 against ``query_terms``.
 
@@ -70,19 +69,13 @@ def bm25_topk(
     plan — for callers composing bm25 into a larger lazy pipeline or
     running where executor storage for the checkpoint is unavailable.
 
-    **Executor-loss caveat (advice, round 9):** the default cut is
-    ``localCheckpoint`` — blocks live on executors, NOT in the
-    fault-tolerant store, so on a real cluster a lost executor kills
-    the job (local mode cannot lose one). For cluster deployment pass
-    ``checkpoint_dir`` (HDFS/S3): the cut routes through reliable
-    ``DataFrame.checkpoint`` via :func:`..checkpointing.eager_cut`
-    (the connected_components scoping protocol) and survives executor
-    loss at the cost of one distributed write — or use
-    ``materialize=False`` to keep recompute-on-loss lineage. The two
-    are mutually exclusive: ``checkpoint_dir`` is only consumed by the
-    ``materialize=True`` cut, so the contradictory combination is
-    refused loudly instead of silently checkpointing nothing (advice,
-    round 10).
+    The cut follows the session's policy
+    (:func:`..checkpointing.eager_cut`): reliable ``DataFrame.checkpoint``
+    when the session has a checkpoint dir (set ``spark.checkpoint.dir``
+    on a cluster), surviving executor loss at the cost of one distributed
+    write; otherwise ``localCheckpoint``, whose blocks live on executors,
+    so a lost executor kills the job. ``materialize=False`` keeps
+    recompute-on-loss lineage instead.
 
     Output: ``(id, dl, tf_<term>..., score)`` ordered by
     ``(score DESC, id)``. ``dl`` is the whitespace-token document length;
@@ -96,13 +89,6 @@ def bm25_topk(
         # the nprobe/radius class (round 9): top-0 is a silently-empty
         # result, not a cheaper query — refused across all top-k ops
         raise ValueError(f"bm25_topk: k must be >= 1, got {k!r}")
-    if checkpoint_dir is not None and not materialize:
-        raise ValueError(
-            "bm25_topk: checkpoint_dir was given but materialize=False — "
-            "nothing would be checkpointed; pass materialize=True for a "
-            "reliable cut or drop checkpoint_dir for recompute-on-loss "
-            "lineage"
-        )
     if not query_terms:
         raise ValueError("bm25_topk: need at least one query term")
     if len(set(query_terms)) != len(query_terms):
@@ -179,9 +165,8 @@ def bm25_topk(
     )
     if materialize:
         # one tokenize+tf pass total, not one per consumer (profiled:
-        # the doubled pass WAS the r8 6.2× scaling outlier); reliable
-        # when checkpoint_dir is given, executor-local otherwise
-        base = eager_cut(base, checkpoint_dir)
+        # the doubled pass WAS the r8 6.2× scaling outlier)
+        base = eager_cut(base)
 
     stats = base.agg(
         F.count(F.lit(1)).alias("__n"),

@@ -293,7 +293,6 @@ def _curation_base(
     with_shingles: bool,
     shingle_n: int = 3,
     eager: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """The builders' fused base projection (r20): quality gate → exact
     dedup → ONE narrow per-doc projection carrying everything BOTH
@@ -318,6 +317,8 @@ def _curation_base(
     ``eager=False`` keeps the whole plan lazy (no cut anywhere); each
     consumer then re-derives the base — the documented inspection/
     composition mode, unchanged in spirit from the pre-r20 lazy form.
+    The cut follows the session's policy
+    (:func:`..operators.checkpointing.eager_cut`).
     """
     exact = _quality_exact(docs, quality_min)
     cols = [
@@ -331,7 +332,7 @@ def _curation_base(
         )
     base = _spread(exact, "doc_id").select(*cols)
     if eager:
-        base = eager_cut(base, checkpoint_dir)
+        base = eager_cut(base)
     return base
 
 
@@ -343,7 +344,6 @@ def build_training_corpus(
     max_df: int | None = None,
     pairs: DataFrame | None = None,
     eager: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Run the full curation pipeline; returns per-(split, lang) stats.
 
@@ -358,24 +358,13 @@ def build_training_corpus(
     output of a MinHash-LSH pass, mirroring ``signatures=`` one level up;
     when given, pair generation is skipped entirely (``max_df`` ignored).
 
-    ``checkpoint_dir`` (advice, round 9): the eager cuts here default to
-    executor-resident ``localCheckpoint`` — fine in local mode, but on a
-    real cluster a lost executor kills the job. A reliable store path
-    routes every cut (the fused base projection of :func:`_curation_base` and
-    the stats result) through ``DataFrame.checkpoint`` instead
-    (operators/checkpointing.eager_cut). Under ``eager=False`` there are
-    NO cuts in this pipeline at all, so a supplied ``checkpoint_dir``
-    would be silently ignored — refused loudly instead (advice, round
-    10; contrast :func:`build_training_corpus_clustered`, whose CC
-    rounds consume it even when ``eager=False``).
+    ``eager=True`` (default) cuts lineage twice — the fused base
+    projection of :func:`_curation_base` and the stats result — under
+    the session's policy (:func:`..operators.checkpointing.eager_cut`):
+    reliable ``DataFrame.checkpoint`` when the session has a checkpoint
+    dir (set ``spark.checkpoint.dir`` on a cluster), else
+    executor-resident ``localCheckpoint``. ``eager=False`` cuts nothing.
     """
-    if checkpoint_dir is not None and not eager:
-        raise ValueError(
-            "build_training_corpus: checkpoint_dir was given but "
-            "eager=False — this pipeline performs no lineage cuts at all "
-            "under eager=False, so nothing would be checkpointed; pass "
-            "eager=True for reliable cuts or drop checkpoint_dir"
-        )
     # ONE fused materialization (r20, :func:`_curation_base`): the
     # deduped corpus feeds two consumers (pair generation + the final
     # anti-join/stats), and everything either needs fits one narrow
@@ -386,8 +375,7 @@ def build_training_corpus(
     # between the dedup and near-dup stages (~40 B/doc + shingles, vs
     # the corpus text).
     base = _curation_base(
-        docs, quality_min, with_shingles=pairs is None,
-        eager=eager, checkpoint_dir=checkpoint_dir,
+        docs, quality_min, with_shingles=pairs is None, eager=eager
     )
     if pairs is None:
         pairs = ngram_jaccard_pairs_from_projection(
@@ -398,7 +386,7 @@ def build_training_corpus(
     kept = base.join(drop_ids, "doc_id", "left_anti")
     stats = _split_stats(kept, train_cut)
     if eager:
-        stats = eager_cut(stats, checkpoint_dir)
+        stats = eager_cut(stats)
     return stats
 
 
@@ -410,7 +398,6 @@ def build_training_corpus_clustered(
     max_df: int | None = None,
     pairs: DataFrame | None = None,
     eager: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """The curation pipeline with the published-standard near-dup policy:
     connected components over the pair graph, keep exactly one document
@@ -428,40 +415,31 @@ def build_training_corpus_clustered(
     cluster step. Dropping candidate edges can only SPLIT clusters, so
     the capped pipeline's kept set is always a superset of the exact
     pipeline's kept set (property-tested in tests/test_curation_ops.py).
-    ``checkpoint_dir`` as in :func:`build_training_corpus`, additionally
-    forwarded to the per-round CC lineage cuts (operators/graph.py) —
-    which run eagerly regardless, so here ``eager=False`` +
-    ``checkpoint_dir`` is NOT contradictory (the CC cuts still consume
-    the reliable store); only the pair-generation/stats cuts are skipped,
-    and the dir is withheld from :func:`~..operators.dedup.
-    ngram_jaccard_pairs` in that mode rather than tripping its
-    no-op refusal.
+    Lineage cuts as in :func:`build_training_corpus`, plus the per-round
+    CC cuts (operators/graph.py), which run under the same session
+    policy even when ``eager=False``.
     """
     from ..operators.graph import connected_components
 
     # fused-base shape identical to build_training_corpus (r20,
     # :func:`_curation_base`); under eager=False the base stays lazy and
-    # the checkpoint_dir is consumed by the CC rounds only (which run
-    # eagerly regardless), exactly the pre-r20 contract.
+    # only the CC rounds cut lineage
     base = _curation_base(
-        docs, quality_min, with_shingles=pairs is None,
-        eager=eager, checkpoint_dir=checkpoint_dir if eager else None,
+        docs, quality_min, with_shingles=pairs is None, eager=eager
     )
     if pairs is None:
         pairs = ngram_jaccard_pairs_from_projection(
             base.select(F.col("doc_id").alias("__id"), "__arr"),
             threshold=near_dup_threshold, max_df=max_df,
         )
-    cc = connected_components(
-        pairs, src="id_a", dst="id_b", checkpoint_dir=checkpoint_dir
-    )
+    cc = connected_components(pairs, src="id_a", dst="id_b")
     drop_ids = cc.filter(F.col("cluster_id") != F.col("id")).select(
         F.col("id").alias("doc_id")
     )
     kept = base.join(drop_ids, "doc_id", "left_anti")
     stats = _split_stats(kept, train_cut)
     if eager:
-        stats = eager_cut(stats, checkpoint_dir)
+        stats = eager_cut(stats)
     return stats
 
 

@@ -62,7 +62,7 @@ _SCHEMA_MEMO: dict[tuple, object] = {}
 # ``load_table`` runs 1-6 times INSIDE every timed query — the four
 # per-call sets summed to ~0.2-0.25 s across a bench pass while writing
 # the same values every time. The pin is now once per session object
-# (the same pattern as ``sc._dtm_checkpoint_root``): a fresh session —
+# (a flag attribute on the session itself): a fresh session —
 # the driver's vanilla session, each bench-pass subprocess — pays it
 # exactly once.
 #

@@ -67,69 +67,50 @@ def stream_events(
     return stream
 
 
-def _run_to_memory(result: DataFrame, mode: str) -> DataFrame:
-    name = f"mem_{uuid.uuid4().hex[:8]}"
-    q = (
-        result.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(30)
-    return result.sparkSession.table(name)
+def _run_to_memory(
+    result: DataFrame, mode: str, checkpoint: str | None = None
+) -> DataFrame:
+    """Run ``result`` to completion and return what its sink holds.
 
+    Without ``checkpoint`` every run starts fresh. With one, the query
+    runs on that DURABLE checkpoint, so a later invocation with the same
+    ``checkpoint`` RESUMES from its state store instead of starting fresh
+    — the restart-mid-wave harness (tools/streaming_hostile_sim.py).
 
-def _run_to_memory_checkpointed(result: DataFrame, mode: str, checkpoint: str) -> DataFrame:
-    """Like ``_run_to_memory`` but on a DURABLE checkpoint, so a later
-    invocation with the same ``checkpoint`` RESUMES the query from its
-    state store instead of starting fresh — the restart-mid-wave harness
-    (r15 verdict item 4; tools/streaming_hostile_sim.py).
-
-    Complete mode uses the memory sink directly: Spark permits checkpoint
-    recovery there because the full table is recomputed from restored
-    state each trigger. Update/append mode's memory sink is NOT
-    recovery-capable (Spark refuses the restart), so both route through
-    the same emulation of the append-per-trigger content shape — a
-    recovery-capable ``foreachBatch`` parquet append
+    Complete mode uses the memory sink either way: Spark permits
+    checkpoint recovery there because the full table is recomputed from
+    restored state each trigger. Update/append mode's memory sink is NOT
+    recovery-capable (Spark refuses the restart), so with a checkpoint
+    both route through the same emulation of the append-per-trigger
+    content shape — a recovery-capable ``foreachBatch`` parquet append
     at ``<checkpoint>_emit``: the returned frame reads the accumulated
     emissions across ALL runs sharing the checkpoint — one row per (key,
     batch) in update mode, one row per emitted match in append mode
     (streaming_click_purchase_join), exactly what the memory table holds
-    in those modes. Clean
-    stop/restart replays no committed batch, so the append is exact here;
-    a mid-batch crash could re-append its batch (foreachBatch is
-    at-least-once), which the production path handles with MERGE
-    (streaming_order_pipeline) — this helper is the deterministic test
-    harness, not a production sink.
+    in those modes. Clean stop/restart replays no committed batch, so the
+    append is exact here; a mid-batch crash could re-append its batch
+    (foreachBatch is at-least-once), which the production path handles
+    with MERGE (streaming_order_pipeline) — this helper is the
+    deterministic test harness, not a production sink.
     """
-    if mode == "complete":
+    writer = result.writeStream.outputMode(mode).trigger(availableNow=True)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    to_memory = checkpoint is None or mode == "complete"
+    if to_memory:
         name = f"mem_{uuid.uuid4().hex[:8]}"
-        q = (
-            result.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+        writer = writer.format("memory").queryName(name)
+    else:
+        out = checkpoint + "_emit"
+        writer = writer.foreachBatch(
+            lambda df, _eid: df.write.mode("append").parquet(out)
         )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination(30)
-        return result.sparkSession.table(name)
-    out = checkpoint + "_emit"
-    q = (
-        result.writeStream.outputMode(mode)
-        .foreachBatch(lambda df, _eid: df.write.mode("append").parquet(out))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = writer.start()
     q.processAllAvailable()
     q.stop()
     q.awaitTermination(30)
+    if to_memory:
+        return result.sparkSession.table(name)
     return result.sparkSession.read.parquet(out)
 
 
@@ -205,9 +186,7 @@ def streaming_session_window(
             "n_events",
         )
     )
-    if checkpoint is not None:
-        return _run_to_memory_checkpointed(agg, "complete", checkpoint)
-    return _run_to_memory(agg, "complete")
+    return _run_to_memory(agg, "complete", checkpoint)
 
 
 def streaming_dedup_count(
@@ -229,9 +208,7 @@ def streaming_dedup_count(
         ["event_id"]
     )
     agg = deduped.groupBy("event_type").agg(F.count("*").alias("n"))
-    if checkpoint is not None:
-        return _run_to_memory_checkpointed(agg, "complete", checkpoint)
-    return _run_to_memory(agg, "complete")
+    return _run_to_memory(agg, "complete", checkpoint)
 
 
 def streaming_stateful_counters(
@@ -279,9 +256,7 @@ def streaming_stateful_counters(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    if checkpoint is not None:
-        return _run_to_memory_checkpointed(res, "update", checkpoint)
-    return _run_to_memory(res, "update")
+    return _run_to_memory(res, "update", checkpoint)
 
 
 def streaming_counters_native(
@@ -326,9 +301,7 @@ def streaming_counters_native(
         F.count("*").alias("n"),
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("total_cents"),
     )
-    if checkpoint is not None:
-        return _run_to_memory_checkpointed(agg, "update", checkpoint)
-    return _run_to_memory(agg, "update")
+    return _run_to_memory(agg, "update", checkpoint)
 
 
 def streaming_click_purchase_join(
@@ -377,9 +350,7 @@ def streaming_click_purchase_join(
         "purchase_id",
         (F.round(F.col("purchase_value") * 100)).cast("long").alias("purchase_cents"),
     )
-    if checkpoint is not None:
-        return _run_to_memory_checkpointed(joined, "append", checkpoint)
-    return _run_to_memory(joined, "append")
+    return _run_to_memory(joined, "append", checkpoint)
 
 
 def _checkpointed_state_pipeline(
@@ -452,56 +423,6 @@ def _checkpointed_state_pipeline(
         if os.path.exists(marker):
             with open(marker) as fh:
                 bound = fh.read().strip()
-            # migration shim (advice, round 8): markers written BEFORE
-            # the r8 abspath→realpath switch hold the abspath spelling;
-            # through a symlinked checkpoint path that differs from the
-            # realpath, and a legitimate in-flight restart (epoch dirs
-            # present) would be refused on upgrade. An old-format marker
-            # that abspath-matches THIS checkpoint is the same lineage —
-            # accept it and rewrite it in place in the new format.
-            # ADVICE r9 tightening: the abspath match alone cannot see a
-            # SYMLINK RETARGETED between runs — the old marker's abspath
-            # spelling still matches while the realpath now names a
-            # DIFFERENT checkpoint, and a blind rewrite would rebind
-            # foreign replayable epoch state. Before rewriting over
-            # committed epochs, require the realpath'd target to be
-            # consistent with them: every committed epoch except the
-            # newest (the legitimate crash window — _SUCCESS written,
-            # offset commit not yet) must have its batch committed in
-            # THIS checkpoint's commits/ log. A retargeted link fails
-            # that (the other checkpoint's commit ids don't cover this
-            # state's epochs) and falls through to the loud refusal.
-            #
-            # RESIDUAL GAP, inherent (advice, round 10 — documented, not
-            # closable): the coverage check excludes the NEWEST epoch
-            # because a same-lineage crash legitimately leaves one
-            # committed epoch dir with no commit file (_SUCCESS written,
-            # offset commit not yet). With <= 1 committed epoch the
-            # epochs[:-1] check is therefore VACUOUSLY true, and it is
-            # also satisfied coincidentally if the foreign checkpoint
-            # happens to have commits for the same batch ids. In both
-            # cases a retargeted symlink still rebinds and stale epoch_0
-            # state can swallow the new lineage's first batch. Closing
-            # it would refuse the legitimate crash-restart, which is the
-            # more common event — so the migration path is safe BY
-            # CONSTRUCTION only at >= 2 committed epochs; operators
-            # migrating younger state through retargeted symlinks should
-            # use a fresh state_dir instead.
-            if bound != lineage and bound == os.path.abspath(checkpoint_dir):
-                epochs = sorted(
-                    int(d[len("epoch_"):])
-                    for d in os.listdir(state_dir)
-                    if d.startswith("epoch_")
-                    and os.path.exists(os.path.join(state_dir, d, "_SUCCESS"))
-                )
-                commits_covered = all(
-                    os.path.exists(os.path.join(lineage, "commits", str(e)))
-                    for e in epochs[:-1]
-                )
-                if commits_covered:
-                    with open(marker, "w") as fh:
-                        fh.write(lineage)
-                    bound = lineage
             if bound != lineage:
                 # the refusal exists to protect REPLAYABLE state (epoch
                 # dirs whose ids would collide with the new lineage's).

@@ -27,3 +27,12 @@ def test_warm_section_first_is_caught(tool):
     doc = json.loads(tool.synthetic_line())
     line = json.dumps({"queries": doc.pop("queries"), **doc})
     assert tool.check(line) == 1
+
+
+def test_compact_separator_line_parses(tool):
+    # the same line without json.dumps' default spaces: the warm section
+    # is found by decoding the object, not by matching the separators
+    doc = json.loads(tool.synthetic_line())
+    line = json.dumps(doc, separators=(",", ":"))
+    assert tool.check(line) == 0
+    assert tool.warm_cells(line[-tool.TAIL_CHARS:]) == doc["queries"]

@@ -280,29 +280,6 @@ class TestCappedCandidateInjection:
         for k, n in exact.items():
             assert capped[k] >= n
 
-    def test_reliable_checkpoint_dir_end_to_end(self, spark, sf_dir, tmp_path):
-        # checkpoint_dir threads through the shingle cut, the CC rounds
-        # and the stats cut (r10) — both pipelines must produce stats
-        # byte-identical to the localCheckpoint default, with checkpoint
-        # files actually landing under the given root.
-        import os
-
-        from data_transform_make_spark.plans.training_corpus import (
-            build_training_corpus,
-            build_training_corpus_clustered,
-        )
-
-        docs = self._docs(spark, sf_dir)
-        root = str(tmp_path / "pipe_ckpt")
-        for build in (build_training_corpus, build_training_corpus_clustered):
-            base = sorted(map(tuple, build(docs).collect()))
-            reli = sorted(map(tuple, build(docs, checkpoint_dir=root).collect()))
-            assert base == reli and base, build.__name__
-        assert any(files for _, _, files in os.walk(root))
-        sc = spark.sparkContext
-        sc._dtm_checkpoint_root = None
-        sc._dtm_checkpoint_set = None
-
     def test_pairs_injection_matches_max_df_path(self, spark, sf_dir):
         # Injecting the precomputed capped candidate frame must be
         # byte-identical to letting the builder generate it (the
@@ -492,170 +469,6 @@ class TestCacheHygiene:
         assert self._cache_empty(spark)
         build_training_corpus_clustered(docs).count()
         assert self._cache_empty(spark)
-
-
-class TestReliableCheckpoint:
-    def test_connected_components_reliable_path(self, spark, tmp_path):
-        from data_transform_make_spark.operators.graph import connected_components
-
-        edges = spark.createDataFrame(
-            [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
-        )
-        # force the distributed rounds: the small-graph driver fast path
-        # would solve this graph without ever touching a checkpoint
-        out = connected_components(
-            edges,
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            small_graph_threshold=0,
-        )
-        got = {r["id"]: r["cluster_id"] for r in out.collect()}
-        assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-        # the reliable path actually wrote checkpoint data to the dir
-        import os
-
-        files = [
-            p for (root, _, names) in os.walk(tmp_path / "ckpt") for p in names
-        ]
-        assert files, "reliable checkpoint wrote nothing"
-
-    def test_preexisting_checkpoint_dir_is_restored(self, spark, tmp_path):
-        """setCheckpointDir is session-global; a dir some OTHER caller set
-        must be put back when connected_components is done with its own
-        (advice, rounds 5-6 — the scoping half of the warning). Safe to
-        restore because every per-round cut is eager."""
-        from data_transform_make_spark.operators.graph import connected_components
-
-        sc = spark.sparkContext
-        sc.setCheckpointDir(str(tmp_path / "theirs"))
-        sc._dtm_checkpoint_root = None  # not ours — simulate a foreign caller
-        theirs = sc.getCheckpointDir()
-        assert "theirs" in theirs
-
-        edges = spark.createDataFrame(
-            [(1, 2), (2, 3)], "id_a long, id_b long"
-        )
-        out = connected_components(
-            edges,
-            checkpoint_dir=str(tmp_path / "ours"),
-            small_graph_threshold=0,
-        )
-        # the returned frame is checkpointed eagerly inside the call, so
-        # it stays collectable AFTER the restore
-        assert sc.getCheckpointDir() == theirs
-        got = {r["id"]: r["cluster_id"] for r in out.collect()}
-        assert got == {1: 1, 2: 1, 3: 1}
-        # and the module's own idempotence memo was cleared with it
-        assert getattr(sc, "_dtm_checkpoint_root", None) is None
-
-    def test_foreign_set_between_same_root_calls_is_detected(
-        self, spark, tmp_path
-    ):
-        """The idempotence memo alone must not decide the skip (advice,
-        round 7): a FOREIGN setCheckpointDir between two calls with the
-        same root would otherwise leave the memo stale — the second
-        call's reliable checkpoints would silently land in the foreign
-        dir with nothing saved/restored. The live getCheckpointDir() is
-        compared against the path our last set produced; on divergence
-        the dir is re-set (cuts land in OUR root) and the foreign dir is
-        captured and restored on exit."""
-        import os
-
-        from data_transform_make_spark.operators.graph import (
-            connected_components,
-        )
-
-        sc = spark.sparkContext
-        ours = str(tmp_path / "ours")
-        edges = spark.createDataFrame(
-            [(1, 2), (2, 3)], "id_a long, id_b long"
-        )
-        # prime the memo exactly as the module's own set leaves it (doing
-        # it directly keeps the test independent of what earlier tests
-        # left as the session-global dir)
-        sc.setCheckpointDir(ours)
-        sc._dtm_checkpoint_root = ours
-        sc._dtm_checkpoint_set = sc.getCheckpointDir()
-
-        # a foreign caller flips the session-global dir between our calls
-        sc.setCheckpointDir(str(tmp_path / "foreign"))
-        foreign = sc.getCheckpointDir()
-
-        def count_files(root):
-            return sum(
-                len(names) for (_, _, names) in os.walk(root)
-            ) if os.path.exists(root) else 0
-
-        before_ours = count_files(ours)
-        before_foreign = count_files(tmp_path / "foreign")
-        out = connected_components(
-            edges, checkpoint_dir=ours, small_graph_threshold=0
-        )
-        got = {r["id"]: r["cluster_id"] for r in out.collect()}
-        assert got == {1: 1, 2: 1, 3: 1}
-        # the second call's checkpoints landed in OUR root, not the
-        # foreign dir...
-        assert count_files(ours) > before_ours
-        assert count_files(tmp_path / "foreign") == before_foreign
-        # ...and the foreign dir was restored on exit like any other
-        # pre-existing dir
-        assert sc.getCheckpointDir() == foreign
-        assert getattr(sc, "_dtm_checkpoint_root", None) is None
-
-
-    def test_mid_iteration_foreign_set_is_not_clobbered_on_exit(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """Verdict r8: a CONCURRENT caller flipping the session-global
-        checkpoint dir MID-ITERATION is an unclosable race (cuts after
-        the flip land in the foreign dir but stay valid checkpoint data,
-        so the result is unaffected) — but the exit path must respect
-        last-writer-wins: the entry-time dir is NOT restored over the
-        newer foreign set, and the idempotence memo is cleared so the
-        next same-root call re-sets instead of trusting a stale skip."""
-        # patch the CLASSIC DataFrame: in pyspark 4 the public
-        # pyspark.sql.DataFrame is the abstract parent and instances
-        # override checkpoint in pyspark.sql.classic.dataframe.DataFrame
-        from pyspark.sql.classic.dataframe import DataFrame
-
-        from data_transform_make_spark.operators.graph import (
-            connected_components,
-        )
-
-        sc = spark.sparkContext
-        ours = str(tmp_path / "ours")
-        foreign_root = str(tmp_path / "foreign")
-        sc.setCheckpointDir(str(tmp_path / "entry"))
-        sc._dtm_checkpoint_root = None  # entry dir belongs to someone else
-
-        state = {"flipped": False, "foreign": None}
-        orig_checkpoint = DataFrame.checkpoint
-
-        def flip_then_checkpoint(self, eager=True):
-            # the concurrent caller's set lands between two of our cuts
-            if not state["flipped"]:
-                state["flipped"] = True
-                sc.setCheckpointDir(foreign_root)
-                state["foreign"] = sc.getCheckpointDir()
-            return orig_checkpoint(self, eager=eager)
-
-        monkeypatch.setattr(DataFrame, "checkpoint", flip_then_checkpoint)
-        edges = spark.createDataFrame(
-            [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
-        )
-        out = connected_components(
-            edges, checkpoint_dir=ours, small_graph_threshold=0
-        )
-        monkeypatch.undo()
-        # the result is unaffected by where the post-flip cuts landed
-        got = {r["id"]: r["cluster_id"] for r in out.collect()}
-        assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-        assert state["flipped"]
-        # last writer wins: the foreign set survives the exit (the
-        # entry-time dir is NOT put back over it)...
-        assert sc.getCheckpointDir() == state["foreign"]
-        # ...and the memo is cleared, so a next same-root call re-sets
-        assert getattr(sc, "_dtm_checkpoint_root", None) is None
-        assert getattr(sc, "_dtm_checkpoint_set", None) is None
 
 
 class TestDomainMixing:

@@ -76,7 +76,7 @@ def test_ivf_topk_equals_brute_force_within_probed_clusters(spark, sf_dir):
 
 
 def test_ivf_vv_hoist_not_collapsed_back(spark):
-    """Round-11 plan pin (the eager_cut-branch-pin pattern): the hoisted
+    """Round-11 plan pin (a Spark-version pin): the hoisted
     dot(v, v) column stays a SINGLE fold in the optimized plan. The hoist
     relies on CollapseProject refusing to inline a non-cheap alias
     referenced K times — if a Spark version bump relaxes that heuristic,

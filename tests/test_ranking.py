@@ -26,137 +26,6 @@ def test_bm25_hand_computed_single_term(spark):
     assert (by_id[1].dl, by_id[1].tf_cat) == (3, 2)
 
 
-def test_bm25_reliable_checkpoint_dir_agrees_and_restores(spark, tmp_path):
-    """ADVICE r9: with checkpoint_dir the materialize cut routes through
-    reliable DataFrame.checkpoint (survives executor loss) — rows must
-    be bit-identical to the default localCheckpoint path, checkpoint
-    files must land under the given dir, and a FOREIGN pre-existing
-    session checkpoint dir must be restored exactly on exit."""
-    import os
-
-    docs = spark.createDataFrame(
-        [(1, "cat dog cat"), (2, "dog dog"), (3, "cat")],
-        "doc_id long, text string",
-    )
-    sc = spark.sparkContext
-    foreign = str(tmp_path / "foreign")
-    sc.setCheckpointDir(foreign)
-    pre = sc.getCheckpointDir()
-    ours = str(tmp_path / "bm25_ckpt")
-
-    a = [tuple(r) for r in bm25_topk(docs, "doc_id", "text", ["cat"]).collect()]
-    b = [
-        tuple(r)
-        for r in bm25_topk(
-            docs, "doc_id", "text", ["cat"], checkpoint_dir=ours
-        ).collect()
-    ]
-    assert a == b and len(a) == 3
-    # the reliable cut actually wrote under OUR dir...
-    assert any(files for _, _, files in os.walk(ours))
-    # ...and the foreign dir was restored exactly (no fresh UUID subdir)
-    assert sc.getCheckpointDir() == pre
-    # cleanup: drop the session-global dir state for later tests
-    sc._dtm_checkpoint_root = None
-    sc._dtm_checkpoint_set = None
-
-
-def test_eager_cut_concurrent_flip_last_writer_wins(spark, tmp_path, monkeypatch):
-    """eager_cut must honor the same exit contract as connected_components
-    (whose protocol it shares): a concurrent caller flipping the
-    session-global checkpoint dir inside the cut window keeps ITS dir
-    (no restore-over-newer-set) and the idempotence memo is cleared."""
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    from data_transform_make_spark.operators.checkpointing import eager_cut
-
-    sc = spark.sparkContext
-    ours = str(tmp_path / "ours")
-    foreign_root = str(tmp_path / "foreign")
-    sc.setCheckpointDir(str(tmp_path / "entry"))
-    sc._dtm_checkpoint_root = None  # entry dir belongs to someone else
-
-    state = {"foreign": None}
-    orig_checkpoint = DataFrame.checkpoint
-
-    def flip_then_checkpoint(self, eager=True):
-        sc.setCheckpointDir(foreign_root)
-        state["foreign"] = sc.getCheckpointDir()
-        return orig_checkpoint(self, eager=eager)
-
-    monkeypatch.setattr(DataFrame, "checkpoint", flip_then_checkpoint)
-    out = eager_cut(spark.range(3), ours)
-    monkeypatch.undo()
-    assert out.count() == 3
-    # last writer wins; memo cleared for the next same-root call
-    assert sc.getCheckpointDir() == state["foreign"]
-    assert getattr(sc, "_dtm_checkpoint_root", None) is None
-    assert getattr(sc, "_dtm_checkpoint_set", None) is None
-
-
-def test_eager_cut_restores_foreign_dir_when_checkpoint_raises(
-    spark, tmp_path, monkeypatch
-):
-    """The finally path: an exception DURING the reliable checkpoint must
-    still put a foreign pre-existing session dir back exactly and clear
-    the memo — a crashed cut cannot leave the session pointed at our
-    directory."""
-    import pytest
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    from data_transform_make_spark.operators.checkpointing import eager_cut
-
-    sc = spark.sparkContext
-    foreign = str(tmp_path / "foreign")
-    sc.setCheckpointDir(foreign)
-    pre = sc.getCheckpointDir()
-
-    def boom(self, eager=True):
-        raise RuntimeError("simulated checkpoint failure")
-
-    monkeypatch.setattr(DataFrame, "checkpoint", boom)
-    with pytest.raises(RuntimeError, match="simulated"):
-        eager_cut(spark.range(3), str(tmp_path / "ours"))
-    monkeypatch.undo()
-    assert sc.getCheckpointDir() == pre
-    assert getattr(sc, "_dtm_checkpoint_root", None) is None
-    assert getattr(sc, "_dtm_checkpoint_set", None) is None
-
-
-def test_eager_cut_and_cc_share_the_checkpoint_memo(spark, tmp_path):
-    """The point of reusing connected_components' scoping protocol in
-    eager_cut (same _dtm_checkpoint_* attributes): consecutive calls
-    with the SAME root — across the two modules — must not churn UUID
-    subdirectories via repeated setCheckpointDir."""
-    from data_transform_make_spark.operators.checkpointing import eager_cut
-    from data_transform_make_spark.operators.graph import connected_components
-
-    sc = spark.sparkContext
-    root = str(tmp_path / "shared_root")
-    # clean slate: clear the memo AND null the session dir — with a
-    # pre-existing (foreign) dir both modules correctly restore-and-
-    # clear on exit instead of memoizing (the scoped contract), so the
-    # memo persistence under test only applies to the no-prior-dir case
-    sc._dtm_checkpoint_root = None
-    sc._dtm_checkpoint_set = None
-    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
-
-    eager_cut(spark.range(2), root)
-    set_after_first = sc.getCheckpointDir()
-    # getCheckpointDir reports a URI ('file:/…'); compare on the path
-    assert set_after_first and root in set_after_first
-
-    edges = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    connected_components(edges, checkpoint_dir=root, small_graph_threshold=0)
-    # memo hit: cc must NOT have minted a fresh UUID subdir for the root
-    assert sc.getCheckpointDir() == set_after_first
-    eager_cut(spark.range(2), root)
-    assert sc.getCheckpointDir() == set_after_first
-    # cleanup for unrelated tests
-    sc._dtm_checkpoint_root = None
-    sc._dtm_checkpoint_set = None
-
-
 def test_bm25_multi_term_additive(spark):
     docs = spark.createDataFrame(
         [(1, "cat dog"), (2, "cat cat"), (3, "fish")],

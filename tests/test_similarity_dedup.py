@@ -53,29 +53,6 @@ def test_ngram_jaccard_materialize_modes_agree(spark, sf_dir):
     assert a == b and a
 
 
-def test_ngram_jaccard_reliable_checkpoint_dir_agrees(spark, sf_dir, tmp_path):
-    """checkpoint_dir routes the shingle-projection cut through reliable
-    DataFrame.checkpoint — pair set and values must be identical to the
-    default localCheckpoint path (bm25's twin test covers the restore
-    contract; this pins the dedup consumer)."""
-    docs = load_table(spark, sf_dir, "documents")
-    a = sorted(
-        tuple(r)
-        for r in ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.2).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in ngram_jaccard_pairs(
-            docs, "doc_id", "text", 3, 0.2,
-            checkpoint_dir=str(tmp_path / "ng_ckpt"),
-        ).collect()
-    )
-    assert a == b and a
-    sc = spark.sparkContext
-    sc._dtm_checkpoint_root = None
-    sc._dtm_checkpoint_set = None
-
-
 def test_simhash_near_dup_detection(spark):
     """Synthesized corpus (the fixtures have no exact duplicates below
     sf0.1): identical texts must pair at hamming 0; a one-word edit of a
@@ -631,48 +608,6 @@ def test_similarity_threshold_above_one_rejected(spark):
         ngram_jaccard_pairs(docs, "doc_id", "text", threshold=1.0).count()
         == 0
     )
-
-
-def test_checkpoint_dir_without_materialize_rejected(spark, tmp_path):
-    """Round-11 advice close: checkpoint_dir is only consumed by the
-    materialize/eager cut, so supplying it with materialize=False used
-    to be a silent no-op — the caller believes their lineage is reliably
-    cut when NOTHING was checkpointed. Refused loudly across the three
-    operators that take both knobs; the clustered curation pipeline is
-    the documented exception (its CC rounds consume the dir even under
-    eager=False) and must keep accepting the combination."""
-    import pytest
-
-    from data_transform_make_spark.operators.dedup import ngram_jaccard_pairs
-    from data_transform_make_spark.operators.ranking import bm25_topk
-    from data_transform_make_spark.plans.training_corpus import (
-        build_training_corpus,
-        build_training_corpus_clustered,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "a b c d e", "en"), (2, "a b c d e", "en")],
-        "doc_id long, text string, lang string",
-    )
-    ckpt = str(tmp_path / "reliable")
-    with pytest.raises(ValueError, match="nothing would be checkpointed"):
-        ngram_jaccard_pairs(
-            docs, "doc_id", "text", materialize=False, checkpoint_dir=ckpt
-        )
-    with pytest.raises(ValueError, match="nothing would be checkpointed"):
-        bm25_topk(
-            docs, "doc_id", "text", ["a"], materialize=False,
-            checkpoint_dir=ckpt,
-        )
-    with pytest.raises(ValueError, match="no lineage cuts"):
-        build_training_corpus(docs, eager=False, checkpoint_dir=ckpt)
-    # the clustered pipeline routes the dir to the CC per-round cuts even
-    # when eager=False — NOT contradictory, must not raise, and must not
-    # trip ngram_jaccard_pairs' refusal through the internal forwarding
-    out = build_training_corpus_clustered(
-        docs, quality_min=0.0, eager=False, checkpoint_dir=ckpt
-    )
-    assert out.count() >= 0
 
 
 def test_dot_mismatched_dims_null_never_outranks(spark):

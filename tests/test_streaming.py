@@ -648,127 +648,6 @@ def test_replay_guard_accepts_symlinked_checkpoint_respelling(spark, tmp_path):
     assert (r["I1"].general_stock_qty, r["I1"].qty_office) == (10, 0)
 
 
-def test_replay_guard_migrates_pre_realpath_marker(spark, tmp_path):
-    """ADVICE r8: markers written BEFORE the abspath→realpath switch hold
-    the abspath spelling; through a symlinked checkpoint path that
-    differs from the realpath, so a legitimate restart of an IN-FLIGHT
-    job (epoch dirs present — the empty-rebind path cannot save it) was
-    refused on upgrade. An old-format marker that abspath-matches the
-    checkpoint is accepted and rewritten in place in the new format."""
-    import os
-
-    src = str(tmp_path / "webhooks")
-    state_dir = str(tmp_path / "state")
-    cp = str(tmp_path / "cp")
-    link = str(tmp_path / "cp_link")
-    os.makedirs(cp)
-    os.symlink(cp, link)
-    inventory = spark.createDataFrame([("I1", "Tote", 10, 0)], INVENTORY)
-    spark.createDataFrame(
-        [(1, "Approved", [("I1", "Tote", "3")])], WEBHOOKS
-    ).coalesce(1).write.parquet(src)
-
-    def stream():
-        return spark.readStream.schema(WEBHOOKS).parquet(src)
-
-    # first run via the SYMLINK spelling commits an epoch (in-flight job)
-    streaming_order_pipeline(
-        spark, stream(), inventory, state_dir=state_dir, checkpoint_dir=link
-    )
-    assert any(d.startswith("epoch_") for d in os.listdir(state_dir))
-    # simulate the pre-r8 marker format: abspath of the symlink spelling
-    marker = os.path.join(state_dir, "_lineage")
-    legacy = os.path.abspath(link)
-    assert legacy != os.path.realpath(link)  # the upgrade trap is real
-    with open(marker, "w") as fh:
-        fh.write(legacy)
-
-    # restart via the same spelling: same lineage — must not refuse
-    post = streaming_order_pipeline(
-        spark, stream(), inventory, state_dir=state_dir, checkpoint_dir=link
-    )
-    r = {row.inventory_id: row for row in post.collect()}
-    assert (r["I1"].general_stock_qty, r["I1"].qty_office) == (10, 0)
-    # and the marker is migrated to the new (realpath) format in place
-    with open(marker) as fh:
-        assert fh.read().strip() == os.path.realpath(link)
-
-
-def test_replay_guard_migration_refuses_retargeted_symlink(spark, tmp_path):
-    """ADVICE r9: the pre-realpath migration shim matches on abspath
-    alone, so a symlink RETARGETED to a different real checkpoint
-    between runs would pass once and rebind a foreign lineage over
-    replayable epoch state. The shim now requires the realpath'd target
-    to cover the committed epochs (commits/<id> present for every one
-    but the newest) before rewriting — a retargeted link fails that and
-    falls through to the loud lineage refusal."""
-    import os
-
-    import pytest
-
-    src1 = str(tmp_path / "w1")
-    src2 = str(tmp_path / "w2")
-    state_dir = str(tmp_path / "state")
-    cp_a = str(tmp_path / "cp_a")
-    cp_b = str(tmp_path / "cp_b")
-    link = str(tmp_path / "cp_link")
-    os.makedirs(cp_a)
-    os.makedirs(cp_b)
-    os.symlink(cp_a, link)
-    inventory = spark.createDataFrame([("I1", "Tote", 10, 0)], INVENTORY)
-    spark.createDataFrame(
-        [(1, "Approved", [("I1", "Tote", "3")])], WEBHOOKS
-    ).coalesce(1).write.parquet(src1)
-    spark.createDataFrame(
-        [(2, "Approved", [("I1", "Tote", "4")])], WEBHOOKS
-    ).coalesce(1).write.parquet(src2)
-
-    # two runs via the link against checkpoint A: >=2 committed epochs,
-    # so the epochs[:-1] coverage check has teeth
-    streaming_order_pipeline(
-        spark,
-        spark.readStream.schema(WEBHOOKS).parquet(src1),
-        inventory,
-        state_dir=state_dir,
-        checkpoint_dir=link,
-    )
-    spark.read.parquet(src2).write.mode("append").parquet(src1)
-    streaming_order_pipeline(
-        spark,
-        spark.readStream.schema(WEBHOOKS).parquet(src1),
-        inventory,
-        state_dir=state_dir,
-        checkpoint_dir=link,
-    )
-    committed = [
-        d
-        for d in os.listdir(state_dir)
-        if d.startswith("epoch_")
-        and os.path.exists(os.path.join(state_dir, d, "_SUCCESS"))
-    ]
-    assert len(committed) >= 2, committed
-
-    # downgrade the marker to the pre-r8 abspath format, then retarget
-    # the symlink at a DIFFERENT real checkpoint
-    marker = os.path.join(state_dir, "_lineage")
-    with open(marker, "w") as fh:
-        fh.write(os.path.abspath(link))
-    os.remove(link)
-    os.symlink(cp_b, link)
-
-    with pytest.raises(ValueError, match="bound to checkpoint lineage"):
-        streaming_order_pipeline(
-            spark,
-            spark.readStream.schema(WEBHOOKS).parquet(src1),
-            inventory,
-            state_dir=state_dir,
-            checkpoint_dir=link,
-        )
-    # the marker was NOT rewritten — the original lineage is recoverable
-    with open(marker) as fh:
-        assert fh.read().strip() == os.path.abspath(link)
-
-
 def test_replay_guard_inert_without_checkpoint(spark, tmp_path):
     """Without a checkpoint, every run restarts at epoch 0 — the replay
     guard must NOT fire off a leftover state_dir, or a second run's new
@@ -803,66 +682,3 @@ def test_replay_guard_inert_without_checkpoint(spark, tmp_path):
     )
     r2 = {r.inventory_id: r for r in post2.collect()}
     assert (r2["I1"].general_stock_qty, r2["I1"].qty_office) == (3, 7)
-
-
-def test_replay_guard_migration_single_epoch_residual_documented(
-    spark, tmp_path
-):
-    """ADVICE r10, the DOCUMENTED residual of the retarget guard: with
-    only ONE committed epoch the epochs[:-1] coverage check is vacuously
-    true (the newest epoch is excluded because a same-lineage crash
-    legitimately leaves it commit-less), so a retargeted symlink still
-    rebinds. This is the accepted crash-window tradeoff — closing it
-    would refuse legitimate crash restarts (streaming/pipelines.py
-    migration shim). This test PINS the boundary: if the behavior ever
-    changes, the crash-restart semantics changed with it and both this
-    test and the >=2-epoch refusal test above must be revisited
-    together."""
-    import os
-
-    src1 = str(tmp_path / "w1")
-    state_dir = str(tmp_path / "state")
-    cp_a = str(tmp_path / "cp_a")
-    cp_b = str(tmp_path / "cp_b")
-    link = str(tmp_path / "cp_link")
-    os.makedirs(cp_a)
-    os.makedirs(cp_b)
-    os.symlink(cp_a, link)
-    inventory = spark.createDataFrame([("I1", "Tote", 10, 0)], INVENTORY)
-    spark.createDataFrame(
-        [(1, "Approved", [("I1", "Tote", "3")])], WEBHOOKS
-    ).coalesce(1).write.parquet(src1)
-
-    # ONE run via the link: exactly one committed epoch
-    streaming_order_pipeline(
-        spark,
-        spark.readStream.schema(WEBHOOKS).parquet(src1),
-        inventory,
-        state_dir=state_dir,
-        checkpoint_dir=link,
-    )
-    committed = [
-        d
-        for d in os.listdir(state_dir)
-        if d.startswith("epoch_")
-        and os.path.exists(os.path.join(state_dir, d, "_SUCCESS"))
-    ]
-    assert len(committed) == 1, committed
-
-    marker = os.path.join(state_dir, "_lineage")
-    with open(marker, "w") as fh:
-        fh.write(os.path.abspath(link))
-    os.remove(link)
-    os.symlink(cp_b, link)
-
-    # the vacuous check rebinds: the run proceeds and the marker now
-    # points at the retargeted realpath — the documented single-epoch gap
-    streaming_order_pipeline(
-        spark,
-        spark.readStream.schema(WEBHOOKS).parquet(src1),
-        inventory,
-        state_dir=state_dir,
-        checkpoint_dir=link,
-    )
-    with open(marker) as fh:
-        assert fh.read().strip() == os.path.realpath(cp_b)

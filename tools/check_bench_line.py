@@ -54,17 +54,37 @@ def synthetic_line() -> str:
     )
 
 
+def warm_cells(tail: str) -> dict[str, float] | None:
+    """The warm ``queries`` cells in ``tail``, or None when the section
+    is gone. The object after the LAST ``"queries"`` key is decoded as
+    JSON, so any separator style parses; the regex over
+    ``json.dumps``' default separators is only the fallback for a tail
+    whose object does not decode (a truncated line)."""
+    at = tail.rfind('"queries"')
+    m = re.compile(r'"queries"\s*:\s*').match(tail, at) if at >= 0 else None
+    if m:
+        try:
+            obj, _ = json.JSONDecoder().raw_decode(tail, m.end())
+        except json.JSONDecodeError:
+            obj = None
+        if isinstance(obj, dict):
+            return {k: float(v) for k, v in obj.items()}
+    m = re.search(r'"queries": \{([^}]*)\}', tail)
+    if not m:
+        return None
+    return dict(
+        (k, float(v))
+        for k, v in re.findall(r'"([^"]+)": ([0-9.eE+-]+)', m.group(1))
+    )
+
+
 def check(line: str) -> int:
     tail = line[-TAIL_CHARS:]
     problems = []
-    m = re.search(r'"queries": \{([^}]*)\}', tail)
-    if not m:
+    cells = warm_cells(tail)
+    if cells is None:
         problems.append("warm \"queries\" section does not survive the tail cut")
     else:
-        cells = dict(
-            (k, float(v))
-            for k, v in re.findall(r'"([^"]+)": ([0-9.eE+-]+)', m.group(1))
-        )
         missing = [n for n in bench.HEADLINE if n not in cells]
         if missing:
             problems.append(

@@ -65,7 +65,7 @@ crosses the restart (an open session that must merge a late row, a
 counter that must continue rather than recount, a buffered click that a
 late purchase must still join). Update/append-mode emissions are
 accumulated via a recovery-capable foreachBatch parquet append
-(streaming/pipelines.py:_run_to_memory_checkpointed) — the memory sink
+(streaming/pipelines.py:_run_to_memory with a checkpoint) — the memory sink
 only supports checkpoint recovery in complete mode.
 
 Run: python tools/streaming_hostile_sim.py (~3 min). The same wave runs
