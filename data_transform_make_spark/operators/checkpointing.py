@@ -6,7 +6,8 @@ and the connected-components fixpoint (once per round) cut lineage with
 an eager checkpoint. The session decides which kind:
 
 - the session has a checkpoint dir (``sc.getCheckpointDir()``; a
-  deployment sets it with Spark's ``spark.checkpoint.dir`` conf): a
+  deployment sets it with Spark's ``spark.checkpoint.dir`` conf, added
+  in Spark 4.0.0): a
   reliable ``DataFrame.checkpoint`` into that store, which survives
   executor loss at the cost of one distributed write per cut;
 - otherwise ``localCheckpoint``: blocks live on executors, so the cut is

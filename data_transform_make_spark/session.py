@@ -3,10 +3,12 @@
 Local mode is a single JVM; ``spark.driver.memory`` is the only memory knob.
 On a real cluster the same conf block applies minus the master/memory lines:
 AQE handles skew/coalesce at runtime, shuffle partitions sized to the stage.
-Also set ``spark.checkpoint.dir`` to a reliable store (HDFS/S3) there: the
-curation operators' eager lineage cuts then write reliable checkpoints
-that survive executor loss instead of executor-resident local ones
-(operators/checkpointing.py). The engine reads that dir and never sets it.
+Also set ``spark.checkpoint.dir`` (Spark 4.0.0+) to a reliable store
+(HDFS/S3) there: the curation operators' eager lineage cuts then write
+reliable checkpoints that survive executor loss instead of
+executor-resident local ones (operators/checkpointing.py). The engine
+reads that dir and never sets it; tests/test_lineage_cut.py checks that
+the conf reaches ``sc.getCheckpointDir()``.
 """
 
 from __future__ import annotations

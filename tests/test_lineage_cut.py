@@ -5,6 +5,9 @@ writes the session's checkpoint dir."""
 
 import contextlib
 import os
+import subprocess
+import sys
+import textwrap
 
 import pytest
 
@@ -126,3 +129,30 @@ def test_session_checkpoint_dir_left_alone(
         before = sc.getCheckpointDir()
         op(df).count()
         assert sc.getCheckpointDir() == before
+
+
+def test_spark_checkpoint_dir_conf_sets_session_dir(tmp_path):
+    """A deployment turns reliable cuts on with the ``spark.checkpoint.dir``
+    conf alone: a fresh session built with it reports a checkpoint dir
+    under that path. A separate interpreter, since the conf is read only
+    when a SparkContext starts."""
+    root = tmp_path / "conf_ckpt"
+    script = textwrap.dedent(
+        f"""
+        from pyspark.sql import SparkSession
+        spark = (
+            SparkSession.builder.master("local[1]")
+            .config("spark.checkpoint.dir", {str(root)!r})
+            .config("spark.ui.enabled", "false")
+            .getOrCreate()
+        )
+        print("DIR", spark.sparkContext.getCheckpointDir())
+        spark.stop()
+        """
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True, text=True, timeout=300, check=True,
+    ).stdout
+    got = [l[4:] for l in out.splitlines() if l.startswith("DIR ")]
+    assert got and got[0].startswith(f"file:{root}/"), out

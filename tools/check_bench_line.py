@@ -57,25 +57,19 @@ def synthetic_line() -> str:
 def warm_cells(tail: str) -> dict[str, float] | None:
     """The warm ``queries`` cells in ``tail``, or None when the section
     is gone. The object after the LAST ``"queries"`` key is decoded as
-    JSON, so any separator style parses; the regex over
-    ``json.dumps``' default separators is only the fallback for a tail
-    whose object does not decode (a truncated line)."""
+    JSON, so any separator style parses; a tail that has no such key, or
+    whose object after it does not decode, has lost the section."""
     at = tail.rfind('"queries"')
     m = re.compile(r'"queries"\s*:\s*').match(tail, at) if at >= 0 else None
-    if m:
-        try:
-            obj, _ = json.JSONDecoder().raw_decode(tail, m.end())
-        except json.JSONDecodeError:
-            obj = None
-        if isinstance(obj, dict):
-            return {k: float(v) for k, v in obj.items()}
-    m = re.search(r'"queries": \{([^}]*)\}', tail)
     if not m:
         return None
-    return dict(
-        (k, float(v))
-        for k, v in re.findall(r'"([^"]+)": ([0-9.eE+-]+)', m.group(1))
-    )
+    try:
+        obj, _ = json.JSONDecoder().raw_decode(tail, m.end())
+    except json.JSONDecodeError:
+        return None
+    if not isinstance(obj, dict):
+        return None
+    return {k: float(v) for k, v in obj.items()}
 
 
 def check(line: str) -> int:
