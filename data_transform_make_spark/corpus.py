@@ -16,7 +16,7 @@ insensitive value hash):
 
 Hostile-input contracts (round 14 — each asserted by
 tools/adversarial_sim.py on NULL-bearing variants of every table, and
-by the convention batteries in tools/r14_blindspot.py):
+by the convention batteries in tests/test_blindspot_sweep.py):
   * tokenize: empty fragments removed after the split; NULL text -> [];
     fingerprints normalize whitespace BEFORE trimming; a no-token doc
     emits NO shingles (oracle CTEs guard ``len(t) > 0``);
@@ -4147,168 +4147,11 @@ def ll3_training_corpus_capped(spark: SparkSession, sf_dir: str, eager: bool = T
 # order; everything past the window only runs in the local full simulator
 # (tools/driver_sim.py checks all entries every session). With 109 entries
 # the window is rotated round-over-round so every query accumulates a
-# driver-certified CORRECTNESS row: rounds 1-4 certified the original first
-# 50 registration positions; round 5 fronted the never-certified backlog;
-# round 6 re-certified pack1 (red-row fix), the r6 additions, the queries
-# whose text changed, and the r1-r3 backlog — and went 50/50 green.
+# driver-certified CORRECTNESS row; tests/test_driver_window.py checks that
+# each rotation fronts the stalest keys and keeps the core anchors.
 #
-# ROUND 7 (registry FROZEN at 109) went 50/50 green: first rows for
-# diff1/hop1/unp1/st8/rc1/gf1, re-certification of the seven sign-safe
-# mulhash twins, and the r4 block + most of the r5 block refreshed.
-#
-# ROUND 8 (registry FROZEN at 109 — freshness round) went 50/50 green:
-# the 14 r5-stale oracle-able keys, cr1's first-ever (honest no_oracle)
-# row, and 28 of the oldest r6-certified keys. After r8 every
-# oracle-able key's newest row was r6 or newer.
-#
-# ROUND 9 (registry still FROZEN at 109 — the treadmill-finisher round,
-# per the r8 verdict): fronts the 16 oldest external rows —
-# (a) the 8 stale rows-only markers (d3/d4/d5b/d5c/n3/mm2/mm4 at r4,
-#     apx1 at r5 — hash-family/approximate/binary by nature; each
-#     capability held by a certified deterministic twin d3b/d4b/d5d,
-#     n3b, mm2b/mm4b already refreshed in-window; the driver re-records
-#     the honest no_oracle marker exactly as cr1 did in r8),
-# (b) the 8 oldest MATCH keys, all r6: q3, q5, n1, mm2b, mm4b, ta5,
-#     tc1, sd1 —
-# then fills with the 27 r7 keys whose PREVIOUS row is oldest:
-# (c) the 6 keys whose r7 row was their first ever (diff1, hop1, unp1,
-#     st8, rc1, gf1),
-# (d) the 12 keys whose previous row was r4 (d5, g1, g2, mm1, mm3, s1,
-#     ta3, ta4, u1, w1, w4, w5),
-# (e) the alphabetically-first 9 of the 18 keys whose previous row was
-#     r5 (ch1, cs1, d2b, d3b, d4b, d5d, d6, ga1, j4) —
-# anchored by the representative core (p1, p4, i1, j1, a1_a2, q1, st1)
-# kept in-window every round as a cross-round regression tripwire.
-# After r9 NO key of any kind has a newest row older than r7 — the
-# freshness treadmill ends; from r10 a steady ~2-round rotation (the 16
-# remaining r7 keys + the oldest r8 block) holds it. Keys and query
-# bodies are NEVER changed by rotation — only dict order.
-#
-# ROUND 10 (registry still FROZEN at 109 — first steady-rotation
-# round, per the r9 verdict): the 16 r7 keys (ll1/ll2/ll3 fronted —
-# their plans changed in the r9 d2 fold) + the alphabetical head of
-# the 43 r8 keys. After r10 no row is older than r8.
-#
-# ROUND 11 (registry FROZEN at 109 — steady rotation, per the r10
-# verdict item 1): the 16 r8-stale keys fronted, then the
-# alphabetically-first 27 of the 43 keys whose newest row was r9.
-# After r11 no key of any kind has a row older than r9.
-#
-# ROUND 12 (registry still FROZEN at 109 — steady rotation, per the
-# r11 verdict item 1): the 16 keys whose newest row is r9 (n3, q3,
-# q5, rc1, s1, sd1, st8, ta3, ta4, ta5, tc1, u1, unp1, w1, w4, w5 —
-# exactly the set the r11 comment named) fronted, then 27 of the 43
-# keys whose newest row is r10: the alphabetically-first 26, plus
-# par1 swapped in for the alphabetically-27th (n2) because par1's
-# execution shape changed THIS round (the fingerprint reshuffle —
-# fresh external rows land the same round as the change, the
-# d5/d5d/n1 precedent from r11). n2 and the rest of the r10 block
-# lead the r13 rotation. After r12 no key of any kind has a row
-# older than r10.
-#
-# ROUND 13 (registry FROZEN at 109 — steady rotation, per the r12
-# verdict directive 2): the 16 r10-stale keys fronted, then the
-# alphabetically-first 27 of the 43 r11-stale keys. After r13 no key
-# of any kind has a row older than r11.
-#
-# ROUND 14 (registry FROZEN at 109 — steady rotation, per the r13
-# verdict directive 1): the 16 r11-stale keys fronted (st3 first —
-# its fold changed in r13 after its last external row), then the
-# alphabetically-first 27 of the 43 r12-stale keys. After r14 no key
-# of any kind has a row older than r12.
-#
-# ROUND 15 (registry FROZEN at 109 — steady rotation, per the r14
-# verdict directive 1): changed-pair keys take priority over
-# alphabetical fill. (a) the 16 r12-stale keys, with the seven whose
-# engine body or oracle twin was touched by the r14 hostile sweep
-# (ta4, w1, q5, st8, unp1, ta3, w5) fronted within the block; then
-# (b) the 20 r13-latest keys whose engine body or oracle twin changed
-# in r14 — ga1/pu1 (money fold, changed twice), udtf1/tf1/d3b
-# (tokenize convention), st6 (dataset-directory streaming-read fix),
-# hop1/n1/d5/w2/w8/q4/ch1/samp1/sp1/pack1/pii1/diff1/mm2b/mm4b
-# (hostile-wave oracle/contract pins) — the d5/par1/st3 "fresh
-# external rows land with the change" precedent; then (c) the
-# alphabetically-first 7 of the 23 unchanged r13-stale keys. The
-# remaining 16 r13-stale keys (d5c, d5d, d6, g1, g2, gf1, j4, mm1,
-# mm2, mm3, mm4, n2, n3b, pc1, q6, sk1) lead the r16 rotation. After
-# r15 no key of any kind has a row older than r13, and every
-# r14-changed-pair key holds a post-change external row.
-#
-# ROUND 16 (registry FROZEN at 109 — steady rotation, per the r15
-# verdict directive 1): (a) the 16 r13-stale keys (the r15 comment's
-# hand-off list, re-verified this round against all fifteen
-# CORRECTNESS files); then (b) the 5 r14-latest streaming keys whose
-# shared `stream_events` source path gained the
-# `max_files_per_trigger` parameter in r15 (st2, st3, st4, st5, st7
-# — signature-additive and re-certified in-session, but the
-# d5/par1/st3 "fresh external rows land with the change" precedent
-# says they front the fill); then (c) the alphabetically-first 22 of
-# the remaining 38 r14-latest keys. The remaining 16 r14-stale keys
-# (lm1, mf1, mix1, mo1, n3, sql1, t5, t7, ta1, ta2, up1, w3, w6, w7,
-# x1, x2) lead the r17 rotation. After r16 no key of any kind has a
-# row older than r14, and every r15-changed-pair key (the
-# max_files_per_trigger five) holds a post-change external row. The
-# r16 engine change (signature-additive `checkpoint` param on the
-# st2/st3/st4/st5 wrappers for the restart-mid-wave harness) touches
-# only keys already in this window, so their r16 rows post-date it —
-# no extra changed-pair carry into r17.
-#
-# ROUND 17 (registry FROZEN at 109 — steady rotation, per the r16
-# verdict directive 1): (a) the 16 r14-stale keys (the r16 comment's
-# hand-off list, re-verified this round against all sixteen
-# CORRECTNESS files); then (b) the alphabetically-first 27 of the 43
-# r15-latest keys. The r17 engine change (signature-additive
-# `checkpoint` param on streaming_counters_native for the
-# st3_native_restart_mid_wave scenario) touches NO registered key's
-# body or twin — streaming_counters_native is a shipped API with an
-# identity test, not a query key, and the st3 key's body
-# (streaming_stateful_counters) is untouched — so no changed-pair
-# fronting this round. The remaining 16 r15-latest keys (sp1, st6,
-# st8, ta3, ta4, ta5, tc1, tf1, u1, udtf1, unp1, w1, w2, w4, w5, w8)
-# lead the r18 rotation. After r17 no key of any kind has a row older
-# than r15.
-#
-# ROUND 18 (registry FROZEN at 109 — steady rotation, per the r17
-# verdict directive 1): (a) the 16 r15-stale keys (the r17 comment's
-# hand-off list, re-verified this round against all seventeen
-# CORRECTNESS files — exact match); then (b) the alphabetically-first
-# 27 of the 43 r16-latest keys. The r18 engine changes (ADVICE-low
-# hardening of tools/r17_evidence.py — pipe draining, final-bin
-# residual, exponent-aware value regex, section-marker guard,
-# parsed-payload fallback — plus README/SCALE.md protocol text) touch
-# NO registered key's body or twin, so no changed-pair fronting this
-# round. The remaining 16 r16-latest keys (ll2, ll3, mm1, mm2, mm3,
-# mm4, n2, n3b, pc1, q6, sk1, st2, st3, st4, st5, st7) lead the r19
-# rotation. After r18 no key of any kind has a row older than r16.
-#
-# ROUND 19 (registry FROZEN at 109 — steady rotation, per the r18
-# verdict directive 1): (a) the 16 r16-stale keys (the r18 comment's
-# hand-off list, re-verified this round against all eighteen
-# CORRECTNESS files — exact match: after r18 freshness is 50×r18 +
-# 43×r17 + 16×r16); then (b) the alphabetically-first 27 of the 43
-# r17-latest keys. The r19 engine changes (ADVICE-low hardening of
-# tools/r18_evidence.py — subcommand validation, tail-parse guards —
-# and tools/r17_evidence.py steal-max residual-bin weighting, plus
-# evidence tooling and ledger text) touch NO registered key's body or
-# twin, so no changed-pair fronting this round. The remaining 16
-# r17-latest keys (q5, rc1, s1, samp1, sd1, sql1, t5, t7, ta1, ta2,
-# up1, w3, w6, w7, x1, x2) lead the r20 rotation. After r19 no key of
-# any kind has a row older than r17.
-#
-# ROUND 20 (registry FROZEN at 109 — final round, steady rotation, per
-# the r19 verdict directive 1): (a) the 16 r17-stale keys (the r19
-# comment's hand-off list, re-verified this round against all nineteen
-# CORRECTNESS files — exact match: after r19 freshness is 50×r19 +
-# 43×r18 + 16×r17); then (b) the alphabetically-first 27 of the 43
-# r18-latest keys. The r20 engine changes (ADVICE-low hardening of
-# tools/evidence.py — probe_spread cell guard, spread CLI
-# cells/rounds arguments, bench_cells vacuous-payload tail fallback —
-# and the tools/r17_evidence.py shim arity guard, plus ledger/README
-# close-out text) touch NO registered key's body or twin, so no
-# changed-pair fronting this round. The remaining 16 r18-latest keys
-# (sp1, st6, st8, ta3, ta4, ta5, tc1, tf1, u1, udtf1, unp1, w1, w2,
-# w4, w5, w8) would lead an r21 rotation. After r20 no key of any
-# kind has a row older than r18.
+# ROUND 20 is the committed window's round (the marker the window test
+# reads): rotation changes only dict order, never keys or query bodies.
 _DRIVER_WINDOW = [
     # core anchors (certified every round)
     "p1_status_gate",

@@ -13,7 +13,7 @@ offer: the HOF evaluates its input ONCE and hands the lambda a bound
 value. :func:`let` packages that — wrap the expensive expression as a
 one-element array, apply the body via ``transform``, take element 0.
 
-Measured (same-session interleaved A/B at sf0.1, SCALE.md round 11):
+Measured (same-session interleaved A/B at sf0.1):
 shingles 4.62 → 0.56 s (8.3×); the quality-gate pair
 (quality_score + lang_id) 2.22 → 0.99 s; outputs bitwise identical —
 the binding changes WHERE a value is computed, never what is computed.

@@ -44,7 +44,7 @@ def tokens(col: Column | str) -> Column:
     so text starting/ending with a tab or newline produced phantom ``''``
     tokens — inflated word counts, a +1 on every bm25 ``dl``, ``''``-bearing
     shingles — identically on both engines (fixture-invisible; found by the
-    r14 blind-spot sweep, tools/r14_blindspot.py). The filter also makes
+    blind-spot sweep, tests/test_blindspot_sweep.py). The filter also makes
     whitespace-only text [] (the documented contract, previously violated
     for non-space whitespace) and NULL [] (previously NULL here while every
     SQL twin's CASE arm said [] — a latent cross-engine divergence on any
@@ -135,9 +135,10 @@ def doc_fingerprint(col: Column | str) -> Column:
     a leading/trailing space whenever the text's edge whitespace was a tab
     or newline (``trim`` strips spaces only), so ``"a b"`` and ``"\\ta b"``
     fingerprinted as distinct — dedup silently missed them, identically on
-    both engines (tools/r14_blindspot.py). After ``\\s+ -> ' '`` every edge
-    run is a single SPACE, which trim removes; results are unchanged for
-    text whose edges are spaces or non-whitespace (all fixture rows).
+    both engines (tests/test_blindspot_sweep.py). After ``\\s+ -> ' '``
+    every edge run is a single SPACE, which trim removes; results are
+    unchanged for text whose edges are spaces or non-whitespace (all
+    fixture rows).
     NULL stays NULL (both engines), never equal to any real fingerprint.
     """
     norm = F.trim(F.regexp_replace(F.lower(_c(col)), r"\s+", " "))

@@ -234,6 +234,15 @@ def first_wins_dedup(
     Execution: :func:`keep_min_by` (map-side-combining aggregate);
     ``packed_order``/``bounds_probe`` pass through to its bounds-checked
     hash-aggregable fast path.
+
+    ``bounds_probe`` MUST be a value SUPERSET of ``df`` on the order
+    columns: every ``order_cols`` value of ``df`` must lie within the
+    probe's min/max. The packed path reads its bounds from the probe
+    instead of ``df`` and does not re-check ``df`` against them, so a
+    probe that is not a superset can elect wrong winners in silence (or
+    raise an ANSI overflow). A frame that ``df`` only filters or joins
+    (e.g. the raw table feeding a join) qualifies; a sample of it, or a
+    copy whose order values were rewritten, does not.
     """
     return keep_min_by(
         df, key_cols, order_cols, packed_order=packed_order, bounds_probe=bounds_probe
@@ -281,7 +290,8 @@ def paragraph_dedup(
          also what keeps the reassembly map parallel: without it, AQE
          broadcasts the tiny position-list side of step 4's join and
          the reassembly inherits the raw scan layout — ONE task on a
-         single-row-group corpus file (measured, SCALE.md round 12);
+         single-row-group corpus file (measured at sf1.0; the numbers
+         are in the ``_spread`` comment in the body);
       2. ``split`` + ``posexplode`` → hash each non-blank paragraph to a
          128-bit ``md5`` fingerprint and DROP the text (map-only), then
          :func:`keep_min_by` keyed on the fingerprint — winner is the
@@ -356,8 +366,8 @@ def paragraph_dedup(
     # reassembly silently inherits the scan layout — ONE task on a
     # single-row-group corpus file (measured: 3.09 vs old 1.88 s
     # full-eval at sf1.0; the shared-spread shape reads 1.89 vs old
-    # 2.39 interleaved). Fixture-scale cost: ~+0.3 s of exchange
-    # overhead at sf0.1, documented in SCALE.md.
+    # 2.39 interleaved). Fixture-scale cost: +0.35 s of fixed exchange
+    # overhead at sf0.1 (0.506 -> 0.851 s full-eval).
     src = _spread(
         df.select(id_col, text_col).filter(F.col(id_col).isNotNull()), id_col
     )
@@ -795,7 +805,7 @@ def ngram_jaccard_pairs(
     the posting lists, and the map-only ``sizes`` lineage once per
     id_a/id_b join; no exchange exists for ReuseExchange to dedupe).
     Measured same-session A/B: 5.44 → 3.82 s at sf1.0 (−30%, output
-    identical), flat at sf0.1 (SCALE.md "d2 fold"). The storage trade is
+    identical), flat at sf0.1. The storage trade is
     the dec1-documented recipe — the projection is ~the tokenized corpus
     — so ``False`` keeps the fully-lazy recompute plan when executor
     storage is tighter than compute.

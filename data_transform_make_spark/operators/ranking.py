@@ -27,9 +27,9 @@ Execution shape (the 100 TB design point):
     the score map — so the text is tokenized and the per-term HOF counts
     run ONCE (round 9: the r8 scaling table's 6.2× outlier profiled to
     exactly this doubled pass — the fold measured 5.55 s → 2.94 s at
-    sf1.0, ratio 6.2× → ~3.5×, results bit-identical; SCALE.md "bm25
-    profile"). The cut is reliable or executor-local by the session's
-    policy (operators/checkpointing.py) — ~40 bytes/doc either way.
+    sf1.0, ratio 6.2× → ~3.5×, results bit-identical). The cut is
+    reliable or executor-local by the session's policy
+    (operators/checkpointing.py) — ~40 bytes/doc either way.
   * The per-document score is a FIXED expression tree (terms folded
     left-to-right in ``query_terms`` order), not a shuffled SUM — float
     addition order is pinned, so the score is reproducible under any
@@ -114,7 +114,7 @@ def bm25_topk(
     # over every output column (count() prunes projections — never time
     # one with count(); caught in-round) read -20%/-24% at sf0.1/sf1.0
     # with the allocation-free per-term fold flat vs shipped, so the
-    # win is the single traversal (tools/r12_evidence.py experiment 2).
+    # win is the single traversal.
     # It grows with term count: T traversals collapse to 1.
     # Internal columns are keyed by term INDEX, never by the term text:
     # F.col(f"tf_{term}") would parse a dotted term ('node.js') as a
@@ -142,14 +142,13 @@ def bm25_topk(
     # (operators/dedup.py:20) of hash-repartitioning before such maps —
     # a single-row-group corpus file otherwise pins the whole tf stage
     # to ONE task (measured end-to-end at sf1.0, rows asserted
-    # identical: 3.44 -> 0.97 s; 10x-data growth ratio 5.2 -> 1.6 —
-    # tools/r12_evidence.py experiment 3). On a cluster the same spread
-    # balances text-length skew across executors; the price is one
-    # id-keyed text exchange before the text is dropped to the narrow
-    # (id, dl, tf...) projection. The fused fold is HOISTED into its
-    # own column so it runs once, not once per extracted counter — the
-    # IVF vv pattern; CollapseProject declines to inline a non-cheap
-    # alias referenced T times, pinned by
+    # identical: 3.44 -> 0.97 s; 10x-data growth ratio 5.2 -> 1.6). On
+    # a cluster the same spread balances text-length skew across
+    # executors; the price is one id-keyed text exchange before the
+    # text is dropped to the narrow (id, dl, tf...) projection. The
+    # fused fold is HOISTED into its own column so it runs once, not
+    # once per extracted counter — the IVF vv pattern; CollapseProject
+    # declines to inline a non-cheap alias referenced T times, pinned by
     # tests/test_ranking.py::test_bm25_fused_tf_fold_stays_hoisted.
     base = (
         _spread(df, id_col)

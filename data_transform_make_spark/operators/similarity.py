@@ -170,8 +170,8 @@ def assign_ivf_cluster(vec_col, centroids: list[list[float]], vv=None):
     materialize it once (``withColumn("__vv", dot(v, v))``) and pass the
     attribute — bit-identical distances (same expression, evaluated once;
     measured −11% on a 16-centroid assignment over 50k rows, identical
-    assignments, SCALE.md round 11). Default ``None`` keeps the
-    self-contained single-Column form."""
+    assignments). Default ``None`` keeps the self-contained single-Column
+    form."""
     from ..functions.vectors import dot
 
     if not centroids:

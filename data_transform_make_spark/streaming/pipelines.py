@@ -271,11 +271,11 @@ def streaming_counters_native(
 
     Same semantics as ``streaming_stateful_counters`` (identity-tested on
     the full events fixture, tests/test_streaming.py), entirely JVM-side:
-    no Arrow serialization, no Python worker in the state path. The r15
-    A/B (tools/r15_evidence.py st3ab) measured it ×1.45 faster at sf0.1
+    no Arrow serialization, no Python worker in the state path. An
+    identity-asserted interleaved A/B measured it ×1.45 faster at sf0.1
     and ×2.4 at sf1.0, widening with state-key count — the gap is the
     per-key Arrow/Python round-trip that a native HashAggregate over the
-    state store never pays (SCALE.md r15/r16).
+    state store never pays (SCALE.md "Streaming").
 
     Rounding parity: Spark ``round`` on DOUBLE goes through
     ``BigDecimal.valueOf`` (shortest-decimal) with HALF_UP — half away

@@ -14,3 +14,20 @@ def test_no_stale_file_references():
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     assert mod.check() == []
+
+
+def test_no_round_named_tools_or_tests():
+    """Tools and tests are named for what they check, never for the round
+    that added them: git holds the history, and a round-named file is a
+    one-off probe or a shim that outlived its round."""
+    import re
+
+    repo = Path(__file__).resolve().parent.parent
+    pat = re.compile(r"(^|_)r\d+(_|\.)")
+    named = sorted(
+        str(p.relative_to(repo))
+        for d in ("tools", "tests")
+        for p in (repo / d).rglob("*")
+        if p.is_file() and "__pycache__" not in p.parts and pat.search(p.name)
+    )
+    assert named == [], f"round-named files: {named}"

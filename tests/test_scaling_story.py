@@ -1,6 +1,7 @@
-"""Plan-shape pins for the round-13 scaling dispositions (SCALE.md).
+"""Plan-shape pins for the round-13 scaling dispositions (the measured
+ledger is in `git show 208bba2:SCALE.md`).
 
-The r13 layout probe (tools/r13_evidence.py) closed the last ×3+
+A scan-layout probe closed the last ×3+
 whole-engine growth cells as scan-layout artifacts, and the ledger's
 standing story says the number that would actually indicate a defect in
 those cells is a NEW SHUFFLE in their plans (or, for d1, a second one).
@@ -43,13 +44,13 @@ def _shuffles(df) -> int:
 
 def test_ta1_tc1_are_map_only(spark, sf_dir):
     """The projection-ending text ops carry no shuffle: their 10x-data
-    cells are per-core-linear map work by design (SCALE.md r13), and
+    cells are per-core-linear map work by design, and
     that claim is only safe while the plans stay exchange-free."""
     for name in ("ta1_text_stats", "tc1_line_cleaning"):
         df = corpus.queries()[name](spark, sf_dir)
         assert _exchanges(df) == 0, (
             f"{name} grew a shuffle — the 'layout artifact, linear "
-            "per-core' story in SCALE.md r13 no longer applies; "
+            "per-core' story no longer applies; "
             "re-disposition the cell"
         )
 
@@ -63,13 +64,13 @@ def test_d1_has_exactly_the_fingerprint_exchange(spark, sf_dir):
     df = corpus.queries()["d1_exact_dedup"](spark, sf_dir)
     assert _exchanges(df) == 1, (
         "d1's plan no longer has exactly one exchange — the r13 "
-        "disposition (SCALE.md) was measured against the single "
+        "disposition was measured against the single "
         "fingerprint-shuffle shape"
     )
 
 
 def test_curation_pipeline_shuffle_counts_are_pinned(spark, sf_dir):
-    """The ll1/ll2/ll3 layout dispositions (SCALE.md r13: the ×3+ growth
+    """The ll1/ll2/ll3 layout dispositions (round 13: the ×3+ growth
     cells collapse to ×1.75–1.80 on a 32-split layout with ZERO code
     change) rest on the shipped plan shape: quality gate (map-only) →
     ONE fingerprint-dedup shuffle → let-bound shingle projection behind

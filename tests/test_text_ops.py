@@ -99,7 +99,7 @@ class TestTokenShingleProperties:
         # r14 convention: NULL -> [] (matching every SQL twin's CASE
         # arm) and empty fragments filtered after the split, so
         # tab/newline-edged text carries no phantom '' tokens
-        # (tools/r14_blindspot.py; tokens() docstring)
+        # (tests/test_blindspot_sweep.py; tokens() docstring)
         if text is None:
             return []
         import re

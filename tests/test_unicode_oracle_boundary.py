@@ -2,9 +2,9 @@
 
 The fingerprint/tokenize oracle twins assume Spark (Java regex +
 java.lang.String casing) and DuckDB (RE2 + utf8proc) agree on
-``lower``/``trim``/``\\s+``. Probed beyond the ASCII fixture
-(tools/uniprobe.py), they agree on everything probed EXCEPT three
-classes, pinned here in both directions:
+``lower``/``trim``/``\\s+``. Probed beyond the ASCII fixture, they
+agree on everything probed EXCEPT three classes, pinned here in both
+directions:
 
   * AGREEMENT battery — NBSP / ideographic space / ZWSP (none are
     ``\\s`` to either engine), combining marks, astral-plane chars,
@@ -17,7 +17,7 @@ classes, pinned here in both directions:
     final sigma (Σ → ς word-finally), utf8proc maps every Σ → σ;
     (3) Java regex ``\\s`` includes vertical tab U+000B, RE2's does
     not. If an upgrade makes one AGREE, this fails too — then the
-    boundary doc in SCALE.md shrinks and the case moves up a battery.
+    class list above shrinks and the case moves up a battery.
 
 Production posture: the engine's own fingerprint/tokenize are
 single-engine deterministic at any scale; the DuckDB twin is a test
@@ -77,7 +77,7 @@ def test_oracle_convention_agreement_battery(spark, name, text):
     got_spark, got_duck = _both(spark, text)
     assert got_spark == got_duck, (
         f"{name}: Spark and DuckDB no longer agree — an engine upgrade "
-        "moved the text-oracle convention's boundary (SCALE.md r13)"
+        "moved the text-oracle convention's boundary"
     )
 
 
@@ -86,6 +86,6 @@ def test_oracle_convention_known_divergences(spark, name, text):
     got_spark, got_duck = _both(spark, text)
     assert got_spark != got_duck, (
         f"{name}: the engines now AGREE on a documented divergence class "
-        "— shrink the boundary note in SCALE.md and move this case to "
+        "— shrink this module's class list and move this case to "
         "the agreement battery"
     )

@@ -48,10 +48,11 @@ ADVERSARIAL_DOCS = [
 # (event_id, ts, user_id, event_type, value, props). NULL event time,
 # NULL user, NULL type, NULL props, and a NEGATIVE exact money tie
 # (-12.005 * 100 == -1200.5 exactly — the r14 sign-aware fold class).
-# Deliberately EXCLUDED, each a documented harness boundary (SCALE.md
-# r14): malformed props (DuckDB json errors loudly where Spark nulls)
-# and NULL/NaN money (Arrow float transport conflates them; the money
-# folds refuse both loudly where SQL SUM skips NULL).
+# Deliberately EXCLUDED, each a documented harness boundary (pinned in
+# tests/test_blindspot_sweep.py): malformed props (DuckDB json errors
+# loudly where Spark nulls) and NULL/NaN money (Arrow float transport
+# conflates them; the money folds refuse both loudly where SQL SUM skips
+# NULL).
 ADVERSARIAL_EVENTS = [
     (200001, None, 5, "click", 1.0, '{"k": 1}'),
     (200002, "2024-01-02 10:00:00", None, "click", 1.0, '{"k": 2}'),

@@ -1,9 +1,5 @@
-"""The standing bench-evidence instruments, consolidated (r18 verdict
-item 5): one entry point for everything the per-round protocol runs.
-The per-round files (tools/r17_evidence.py, r18_evidence.py,
-r19_evidence.py) remain as thin deprecation shims re-exporting from
-here, so every historical SCALE.md command line still reproduces;
-new rounds should call THIS tool.
+"""The bench-evidence instruments: one entry point for everything the
+bench protocol (SCALE.md "Bench protocol") runs.
 
 Subcommands:
 
@@ -210,9 +206,8 @@ def bench_cells(path: str) -> dict:
         )
     # driver-format file: parsed is null, cells live in the (often
     # front-truncated) "tail" output string — recover by section
-    # split + regex, like tools/r16_evidence.py. A key cut off by
-    # the truncation regexes to a wrong name and drops out of the
-    # comparison intersection naturally.
+    # split + regex. A key cut off by the truncation regexes to a
+    # wrong name and drops out of the comparison intersection naturally.
     tail = top.get("tail") or ""
     if not tail:
         return out
@@ -393,10 +388,9 @@ def probe_spread(
     """Fresh-session spread for `cells` vs their published driver values.
 
     `context_cells` are tracked across the same sessions and reported
-    as spread-only — NO published lookup: the r18 coldspread recorded
-    the movers' warm cells for context, and those are front-truncated
-    out of the driver files, so demanding published values for them
-    would turn the historical command line into a hard exit.
+    as spread-only — NO published lookup: a mover's warm cells are
+    often front-truncated out of the driver files, so demanding
+    published values for them would be a hard exit.
     """
     cells = cells or SPREAD_CELLS
     # name the configuration up front: a stale invocation (old default

@@ -26,8 +26,8 @@ engine-touching step — regenerate, commit, then run ``--check`` in a
 fresh session to prove the committed file is byte-identical to what a
 from-scratch regeneration produces.
 
-Span-count determinism (r15 probes — 6+ fresh sessions, then
-tools/r15_evidence.py catching ll3 read [6, 7] within ONE session):
+Span-count determinism (probed over 6+ fresh sessions, then ll3 caught
+reading [6, 7] within ONE session):
 every cell is stable EXCEPT ll2/ll3, whose executed plans flip 6<->7
 codegen spans run-to-run. Cause (plan-diffed): both read a scoped-cache
 localCheckpoint whose materialized partition count is an AQE coalescing

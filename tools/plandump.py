@@ -1,17 +1,13 @@
-"""Dump .explain('formatted') for bench headline queries — or any
-explicitly named registered query — to plans/r21/<query>_<suffix>.txt
-(optimization-round evidence).
+"""Dump .explain('formatted') for the bench headline queries — or any
+explicitly named registered query — to OUT_DIR/<query>.txt.
 
-Usage: python tools/r21_plandump.py <suffix: before|after> [query ...]
+Usage: python tools/plandump.py OUT_DIR [query ...]
 Default sf dir: $SPARK_GRAFT_SF_DIR or /root/testdata/sf0.1.
 Eager-materializing queries (ll*/d2/d3/dec1/bm25) are rendered through
 their ``eager=False`` lazy form where the callable supports it, so the
 plan shows the real composed scan/shuffle shape rather than a
-post-checkpoint stub (the explain_audit.py convention).
-
-Unlike r20_plandump, explicitly named queries need not be in the bench
-headline set (this round touches p4_first_wins_dedup, which is
-oracle-checked but not benched).
+post-checkpoint stub (the explain_audit.py convention). For a
+before/after comparison, dump each side into its own OUT_DIR.
 """
 from __future__ import annotations
 
@@ -30,19 +26,14 @@ from data_transform_make_spark.session import get_spark  # noqa: E402
 import bench  # noqa: E402
 
 
-def main() -> int:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    only = sys.argv[2:]
+def main(argv: list) -> int:
+    if not argv:
+        raise SystemExit("usage: plandump.py OUT_DIR [query ...]")
+    out_dir, names = argv[0], argv[1:] or bench.HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r21",
-    )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("r21-plandump")
+    spark = get_spark("plandump")
     qs = corpus.queries()
-    names = only if only else bench.HEADLINE
     for name in names:
         fn = qs[name]
         kwargs = {}
@@ -52,7 +43,7 @@ def main() -> int:
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
-        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        path = os.path.join(out_dir, f"{name}.txt")
         with open(path, "w") as f:
             f.write(buf.getvalue())
         print(f"wrote {path}")
@@ -61,4 +52,4 @@ def main() -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))

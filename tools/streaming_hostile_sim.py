@@ -68,8 +68,8 @@ accumulated via a recovery-capable foreachBatch parquet append
 (streaming/pipelines.py:_run_to_memory with a checkpoint) — the memory sink
 only supports checkpoint recovery in complete mode.
 
-Run: python tools/streaming_hostile_sim.py (~3 min). The same wave runs
-per-suite in tests/test_streaming_hostile.py.
+Run: python tools/streaming_hostile_sim.py (~2 min on a 4-vCPU host). The
+same wave runs per-suite in tests/test_streaming_hostile.py.
 """
 
 import datetime
@@ -213,19 +213,18 @@ def run() -> list:
     from pyspark.sql.window import Window
 
     from data_transform_make_spark import corpus
+    from data_transform_make_spark.session import get_spark
     from data_transform_make_spark.streaming import pipelines as P
 
-    # NO .config() on this builder: getOrCreate() APPLIES builder options
-    # onto an already-running session, so a shuffle.partitions override
-    # here would silently mutate the pytest session shared by every other
-    # test (found r15: it flipped AQE coalescing and broke par1's
-    # ReusedExchange plan pin two files later). Same discipline as
-    # adversarial_sim.py.
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("streaming-hostile-sim")
-        .getOrCreate()
-    )
+    # Reuse a running session as is, and build the engine's own session
+    # only when there is none. getOrCreate() applies builder options onto
+    # an already-running session, so building with get_spark's .config()
+    # calls under pytest would silently mutate the session shared by every
+    # other test (it once flipped AQE coalescing and broke par1's
+    # ReusedExchange plan pin two files later). Standalone, get_spark sizes
+    # shuffle and state-store partitions to the cores; a vanilla session
+    # would run every stateful micro-batch over 200 of them.
+    spark = SparkSession.getActiveSession() or get_spark("streaming-hostile-sim")
     spark.sparkContext.setLogLevel("ERROR")
     sf = build_fixture(spark)
     try:
