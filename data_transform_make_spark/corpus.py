@@ -4149,9 +4149,11 @@ def ll3_training_corpus_capped(spark: SparkSession, sf_dir: str, eager: bool = T
 # the window is rotated round-over-round so every query accumulates a
 # driver-certified CORRECTNESS row; tests/test_driver_window.py checks that
 # each rotation fronts the stalest keys and keeps the core anchors.
+# Rotation changes only dict order, never keys or query bodies.
 #
-# ROUND 20 is the committed window's round (the marker the window test
-# reads): rotation changes only dict order, never keys or query bodies.
+# The round whose driver run certifies this window: the window test folds
+# only the CORRECTNESS files of earlier rounds.
+_DRIVER_WINDOW_ROUND = 20
 _DRIVER_WINDOW = [
     # core anchors (certified every round)
     "p1_status_gate",

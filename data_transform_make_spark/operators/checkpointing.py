@@ -1,9 +1,9 @@
 """The engine's one eager lineage-cut policy.
 
 Operators that fold a shared projection into one pass (bm25_topk,
-ngram_jaccard_pairs, the training-corpus builders, minhash_lsh_pairs)
-and the connected-components fixpoint (once per round) cut lineage with
-an eager checkpoint. The session decides which kind:
+ngram_jaccard_pairs, the training-corpus builders, decontamination_report,
+minhash_lsh_pairs) and the connected-components fixpoint (once per round)
+cut lineage with an eager checkpoint. The session decides which kind:
 
 - the session has a checkpoint dir (``sc.getCheckpointDir()``; a
   deployment sets it with Spark's ``spark.checkpoint.dir`` conf, added

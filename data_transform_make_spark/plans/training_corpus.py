@@ -95,53 +95,11 @@ def hash_split(id_col, train_cut: int = SPLIT_TRAIN_CUT):
     ).otherwise("eval")
 
 
-# One-slot memo for decontamination_report: holds AT MOST one
-# (report, shingled-projection) pair of persisted frames session-wide —
-# materialized-view semantics. A decontamination report over an unchanged
-# corpus is a fixpoint: repeated calls (re-runs, dashboards, the bench)
-# reuse the cached tiny report outright; the projection backs its first
-# materialization (it feeds three consumers — without it the corpus is
-# re-scanned and the shingle expressions re-run per consumer). A report
-# over a DIFFERENT corpus releases the previous pair first, so cache never
-# accumulates per distinct input (the round-5 hygiene invariant, kept —
-# just with a bounded working set of one pair instead of zero; round 5's
-# per-call eager-checkpoint version re-paid the full projection cost every
-# call, a measured 1.9x bench regression). ``sameResult`` on the analyzed
-# plans is the exact equivalence CacheManager itself uses — no hash
-# collisions, no false sharing.
-_DECON_MEMO: list[DataFrame] = []
-
-
 def release_decontamination_cache() -> None:
-    """Release the decontamination memo slot (e.g. at tenant switch).
-
-    unpersist is best-effort: frames memoized under an already-stopped
-    SparkSession raise from the dead JVM handle — the slot must still
-    empty so the next call under a fresh session recomputes cleanly
-    (crash reproduced in review: stop session A, call under session B)."""
-    while _DECON_MEMO:
-        df = _DECON_MEMO.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-
-def _memo_lookup(out: DataFrame) -> DataFrame | None:
-    if not _DECON_MEMO:
-        return None
-    prev = _DECON_MEMO[0]
-    try:
-        if (
-            prev._jdf.queryExecution()
-            .analyzed()
-            .sameResult(out._jdf.queryExecution().analyzed())
-        ):
-            return prev
-    except Exception:  # session restarted / plan not comparable
-        pass
-    release_decontamination_cache()
-    return None
+    """No-op, kept for one caller: the benchmark harness
+    (``perfbench/run.py``) calls it before each timed run. The engine holds
+    no result cache; :func:`decontamination_report` releases its persist
+    before it returns. Delete this function when that harness call goes."""
 
 
 def decontamination_report(
@@ -172,20 +130,24 @@ def decontamination_report(
     groupBy anywhere before the final shared-count agg, which is keyed on
     the doc id and map-side combined. Returns
     ``(id_col, n_shared, contamination)`` for contaminated train docs only.
+
+    ``eager=True`` computes the report at call time and returns it cut
+    with :func:`eager_cut`; the shingled projection is cached only while
+    the call runs, so every call re-derives its report and no result is
+    cached across calls. ``eager=False`` returns the whole plan lazy and
+    uncut (the mode ``tools/explain_audit.py`` audits).
     """
     split = hash_split(id_col, train_cut)
     sh_arr = F.array_distinct(shingles(F.col(text_col), shingle_n))
     # The shingled projection feeds three consumers (train shingles, eval
     # vocabulary, per-doc totals); without materialization each one
     # re-scans the corpus and re-runs the shingle expressions (audited:
-    # 4 parquet scans). persist() collapses that to one pass, held in the
-    # ONE-SLOT memo above: repeated reports over the same corpus reuse the
-    # materialized projection (the dominant cost — round 5's per-call
-    # eager-checkpoint hygiene re-paid it every call, a measured 1.9x
-    # regression), while a different corpus evicts the slot first so cache
-    # stays bounded. The 100 TB equivalent is checkpointing the shingled
-    # projection to Parquet, or accepting ~3 column-pruned scans if
-    # storage is tighter than compute.
+    # 4 parquet scans). The eager path persists it for the length of the
+    # call, cuts the (small) report under the session's lineage-cut policy
+    # (operators/checkpointing.py) and drops the persist before returning,
+    # the minhash_lsh_pairs shape. Cutting the projection itself instead
+    # measured ~1.6x slower at sf1.0: the report's three scans read the
+    # cut rows slower than the persisted columnar cache.
     # _spread first: a single-file corpus scan otherwise pins the
     # interpreted shingle HOF to ONE task (measured ~4.1 -> ~1.5 s at
     # sf0.1); on a cluster it balances text-length skew across executors.
@@ -198,10 +160,10 @@ def decontamination_report(
             b.filter(F.col("__split") == "train")
             .select(F.col(id_col), F.explode("__shs").alias("__sh"))
         )
-        # NO broadcast hint, deliberately (review round 6): with the
-        # hash_split eval side this vocabulary is ~20% of the corpus'
-        # distinct shingles — a forced broadcast dies at the 8 GB cap /
-        # OOMs the driver exactly at the 100 TB design point. AQE
+        # NO broadcast hint, deliberately: with the hash_split eval side
+        # this vocabulary is ~20% of the corpus' distinct shingles — a
+        # forced broadcast dies at the 8 GB cap / OOMs the driver
+        # exactly at the 100 TB design point. AQE
         # converts the join to a broadcast at runtime from its MEASURED
         # size, which is the safe version of the same optimization (and
         # the production decontamination case — a fixed small benchmark
@@ -229,16 +191,11 @@ def decontamination_report(
 
     if not eager:
         return report_plan(base)
-    hit = _memo_lookup(report_plan(base))
-    if hit is not None:
-        return hit
     base = base.persist()
-    # The report stays LAZY — the caller's terminal action (count / collect
-    # / write) materializes it through the persisted projection, and the
-    # persist marks it for reuse by the next same-corpus call.
-    out = report_plan(base).persist()
-    _DECON_MEMO.extend([out, base])
-    return out
+    try:
+        return eager_cut(report_plan(base))
+    finally:
+        base.unpersist()
 
 
 def _quality_exact(docs: DataFrame, quality_min: float) -> DataFrame:

@@ -405,12 +405,6 @@ class TestCacheHygiene:
     register in the CacheManager.)"""
 
     def _cache_empty(self, spark):
-        # drain the decontamination memo first: it legitimately holds one
-        # bounded slot across calls (tested below) and earlier tests in the
-        # session may have populated it
-        from data_transform_make_spark.plans import training_corpus as tc
-
-        tc.release_decontamination_cache()
         return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     def test_minhash_lsh_pairs_releases_signature_cache(self, spark):
@@ -424,37 +418,26 @@ class TestCacheHygiene:
         out.count()
         assert self._cache_empty(spark)
 
-    def test_decontamination_report_bounded_memo(self, spark):
-        """decontamination_report keeps a ONE-SLOT memo of the shingled
-        projection: same-corpus re-runs reuse it (bounded, not a leak),
-        a different corpus evicts the previous slot, and the explicit
-        release API empties the cache entirely."""
-        from data_transform_make_spark.plans import training_corpus as tc
+    def test_decontamination_report_holds_no_cache(self, spark):
+        """decontamination_report caches nothing: the CacheManager is empty
+        once the call returns and after the frame's action, and a second
+        call over the same corpus builds a new frame with equal rows."""
+        from data_transform_make_spark.plans.training_corpus import (
+            decontamination_report,
+        )
 
-        docs_a = spark.createDataFrame(
-            [(i, "the quick brown fox jumps again") for i in range(1, 20)],
+        docs = spark.createDataFrame(
+            [(i, f"the quick brown fox jumps again {i % 3}") for i in range(1, 40)],
             "doc_id long, text string",
         )
-        docs_b = spark.createDataFrame(
-            [(i, "a completely different corpus of words") for i in range(1, 20)],
-            "doc_id long, text string",
-        )
-        tc.release_decontamination_cache()
         assert self._cache_empty(spark)
-        r1 = tc.decontamination_report(docs_a).count()
-        assert len(tc._DECON_MEMO) == 2  # (report, projection) pair
-        memo_report = tc._DECON_MEMO[0]
-        # same corpus again: the CACHED REPORT ITSELF is returned
-        assert tc.decontamination_report(docs_a) is memo_report
-        r2 = tc.decontamination_report(docs_a).count()
-        assert r1 == r2
-        # different corpus: previous pair evicted, exactly one pair remains
-        tc.decontamination_report(docs_b).count()
-        assert len(tc._DECON_MEMO) == 2
-        assert tc._DECON_MEMO[0] is not memo_report
-        assert not memo_report.is_cached
-        # explicit release empties the CacheManager
-        tc.release_decontamination_cache()
+        first = decontamination_report(docs)
+        assert self._cache_empty(spark)
+        rows = sorted(map(tuple, first.collect()))
+        assert self._cache_empty(spark)
+        second = decontamination_report(docs)
+        assert second is not first
+        assert sorted(map(tuple, second.collect())) == rows and rows
         assert self._cache_empty(spark)
 
     def test_training_corpus_builders_release_cache(self, spark, sf_dir):

@@ -20,6 +20,7 @@ from data_transform_make_spark.operators.ranking import bm25_topk
 from data_transform_make_spark.plans.training_corpus import (
     build_training_corpus,
     build_training_corpus_clustered,
+    decontamination_report,
 )
 from data_transform_make_spark.sources.loader import load_table
 
@@ -91,6 +92,7 @@ OPERATORS = {
         _documents,
         lambda df: minhash_lsh_pairs(df, "doc_id", "text", 32, 8, 3, 0.5),
     ),
+    "decontamination_report": (_documents, decontamination_report),
 }
 
 

@@ -14,8 +14,7 @@ This is an ADDITION for decision evidence — the contract bench
 
 Usage: python tools/bench_sf1.py [query ...]   (default: the heavy set)
 Prints one JSON line {"metric": "sf1_families", "queries": {...},
-"sf": 1.0} plus, when a BENCH file with sf0.1 cells is present, the
-per-cell sf1.0/sf0.1 growth ratio table.
+"sf": 1.0}, and each query's runs on stderr.
 """
 from __future__ import annotations
 
@@ -56,21 +55,16 @@ def main() -> int:
     from data_transform_make_spark import corpus
     from data_transform_make_spark.session import get_spark
 
-    sys.path.insert(0, REPO)
-    import bench
-
     spark = get_spark("bench-sf1")
     qs = corpus.queries()
     spark.sparkContext.setJobDescription("sf1 warmup")
     qs["p1_status_gate"](spark, SF1_DIR).count()
     out: dict[str, float] = {}
     for name in names:
-        bench._reset_memo(name)
         spark.sparkContext.setJobDescription(f"sf1 {name} warm")
         qs[name](spark, SF1_DIR).count()
         runs = []
         for i in range(RUNS):
-            bench._reset_memo(name)
             spark.sparkContext.setJobDescription(f"sf1 {name} run{i}")
             t0 = time.perf_counter()
             qs[name](spark, SF1_DIR).count()

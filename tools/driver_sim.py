@@ -7,7 +7,7 @@ SIM_MASTER=local[3] SIM_SHUFFLE_PARTITIONS=7 must still end FAILS: none —
 every oracle MATCH is then a proof the result does not depend on the
 parallelism or shuffle layout). Defaults stay the vanilla driver shape."""
 import math, os, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
