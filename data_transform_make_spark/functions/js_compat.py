@@ -58,12 +58,6 @@ def js_parse_int(col: Column | str) -> Column:
     return tok.try_cast("long")
 
 
-def js_parse_int_or_zero(col: Column | str) -> Column:
-    """``parseInt(x || 0)`` — the reference's read-a-counter idiom: missing,
-    empty, or unparseable -> 0 (makeRouter.js:108,117,181,186,191)."""
-    return F.coalesce(js_parse_int(col), F.lit(0))
-
-
 def js_str_falsy(col: Column | str) -> Column:
     """True where a string column is JS-falsy: NULL or '' (no trim — JS
     ``if (!s)`` does not trim; makeRouter.js:94 checks the raw value)."""

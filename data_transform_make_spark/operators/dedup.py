@@ -90,13 +90,30 @@ def keep_min_by(
         fast = _packed_min_by(df, keys, order_cols, bounds_probe)
         if fast is not None:
             return fast
-    cols = df.columns
-    ordk = F.struct(*[F.col(c) if isinstance(c, str) else c for c in order_cols])
-    return (
-        df.groupBy(*keys)
-        .agg(F.min_by(F.struct(*cols), ordk).alias("__r"))
-        .select("__r.*")
-    )
+    return KeepMinBy(df.columns, keys, order_cols)(df)
+
+
+class KeepMinBy:
+    """:func:`keep_min_by`'s struct path for frames with columns ``cols``:
+    the Column expressions are built once, here, and applied to any number
+    of such frames (each built Column costs py4j round trips, so a stream
+    that dedups every micro-batch builds them once per stream).
+
+    Name keys are selected from the aggregate's grouping output, not from
+    the winning struct: the result then keeps the aggregate's hash
+    partitioning on those keys, so a later operator clustered on them
+    (a window, join or aggregate) needs no exchange of its own.
+    """
+
+    def __init__(self, cols: list[str], keys: list, order_cols: list) -> None:
+        ordk = F.struct(*[F.col(c) if isinstance(c, str) else c for c in order_cols])
+        self.keys = [F.col(k) if isinstance(k, str) else k for k in keys]
+        self.agg = F.min_by(F.struct(*cols), ordk).alias("__r")
+        names = {k for k in keys if isinstance(k, str)}
+        self.out = [F.col(c) if c in names else F.col("__r")[c].alias(c) for c in cols]
+
+    def __call__(self, df: DataFrame) -> DataFrame:
+        return df.groupBy(*self.keys).agg(self.agg).select(*self.out)
 
 
 def _packed_min_by(

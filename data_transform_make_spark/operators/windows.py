@@ -60,16 +60,6 @@ def top_k_per_group(
     )
 
 
-def with_previous(
-    df: DataFrame, key_cols: list[str], ts_col: str, value_col: str, out_col: str = "prev_value"
-) -> DataFrame:
-    """Derive the previous value per key ordered by time — the in-engine
-    alternative to the reference's upstream-supplied ``Previous_Status``
-    (makeRouter.js:145; SURVEY.md §2.8 ordering hazard)."""
-    w = Window.partitionBy(*key_cols).orderBy(F.col(ts_col))
-    return df.withColumn(out_col, F.lag(value_col).over(w))
-
-
 def sessionize(
     df: DataFrame, key_cols: list[str], ts_col: str, gap_seconds: int
 ) -> DataFrame:

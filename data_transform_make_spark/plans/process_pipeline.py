@@ -125,7 +125,10 @@ def process_webhook_pipeline(events: DataFrame, inventory: DataFrame) -> Process
         "inventory_id",
         *[F.col(c).alias(f"__d_{c}") for c in list(COUNTER_COLS) + ["qty_completed"]],
     )
-    merged = inventory.join(renamed, "inventory_id", "left")
+    # rooted on the batch's deltas (a right join keeps every inventory
+    # row), so the post-state belongs to the batch's session, as a
+    # micro-batch's state carry requires (streaming/pipelines.py)
+    merged = renamed.join(inventory, "inventory_id", "right")
     updated = merged
     for c in list(COUNTER_COLS) + ["qty_completed"]:
         updated = updated.withColumn(

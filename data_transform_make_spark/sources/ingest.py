@@ -61,18 +61,6 @@ def _sanitize_expr(c):
     return F.when(F.length(cleaned) == 0, F.lit("{}")).otherwise(cleaned)
 
 
-def sanitize_body(df: DataFrame, body_col: str = "raw_body") -> DataFrame:
-    """NUL-strip + trim + empty->'{}' (server.js:25,27-30).
-
-    JS ``.trim()`` strips ALL whitespace — tabs/newlines AND the Unicode
-    set (NBSP, BOM, Space_Separator, LS/PS); Spark's ``F.trim`` strips only
-    spaces and Java's ``\\s`` only ASCII, so an NBSP-only body would escape
-    the empty-default and dead-letter as invalid_json where the reference
-    returns the '{}' default. The explicit class matches the full JS
-    contract (same hazard as ingest_shaper.combine_embroidery_info)."""
-    return df.withColumn(body_col, _sanitize_expr(F.col(body_col)))
-
-
 def ingest_with_reason(
     df: DataFrame, schema: T.StructType, body_col: str = "raw_body"
 ) -> DataFrame:

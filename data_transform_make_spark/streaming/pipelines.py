@@ -34,7 +34,7 @@ def stream_events(
 
     ``max_files_per_trigger`` caps files per micro-batch (availableNow
     honors it and splits the catch-up into multiple batches, files taken
-    in modification-time order) — the r15 streaming hostile wave uses it
+    in modification-time order) — tools/streaming_hostile_sim.py uses it
     to replay a controlled arrival ORDER (late rows, straddling
     duplicates, an all-dead-letter batch) through the shipped pipeline
     bodies; production runs leave it unset.
@@ -50,8 +50,8 @@ def stream_events(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     if os.path.isdir(path):
         # a Spark-written DATASET directory loads directly (the hostile
-        # and split-layout fixtures; r14 — the glob form below matches
-        # leaf FILES only and would silently stream zero rows here)
+        # and split-layout fixtures): the glob form below matches leaf
+        # FILES only and would silently stream zero rows here
         stream = reader.load(path)
     else:
         # a single FILE needs the glob: the file stream source insists
@@ -237,8 +237,8 @@ def streaming_stateful_counters(
         # sign-aware SQL-round fold (half away from zero on BOTH signs,
         # non-finite refused loudly) — functions/money.py. pandas' own
         # .round() is half-to-even and diverges on exact .5 float ties,
-        # which are REAL (0.005 * 100 == 0.5 exactly; r13 find), and the
-        # interim floor(x+0.5) diverged on negative ties (r14).
+        # which are REAL (0.005 * 100 == 0.5 exactly), and floor(x+0.5)
+        # diverges on negative ties.
         # Absolute import: relative imports don't survive cloudpickle.
         from data_transform_make_spark.functions.money import money_round_units
 
@@ -266,8 +266,11 @@ def streaming_counters_native(
     checkpoint: str | None = None,
 ) -> DataFrame:
     """The st3 per-user (event count, cents sum) counters as a NATIVE
-    update-mode streaming aggregation — the production default whenever
-    the fold is expressible as built-in aggregates.
+    update-mode streaming aggregation — the form to prefer whenever the
+    fold is expressible as built-in aggregates. The st3 corpus query runs
+    the Arrow form (``streaming_stateful_counters``); this one is reached
+    only by its identity test (tests/test_streaming.py) and the restart
+    probe in tools/streaming_hostile_sim.py.
 
     Same semantics as ``streaming_stateful_counters`` (identity-tested on
     the full events fixture, tests/test_streaming.py), entirely JVM-side:
@@ -281,8 +284,9 @@ def streaming_counters_native(
     ``BigDecimal.valueOf`` (shortest-decimal) with HALF_UP — half away
     from zero on both signs, no ``+0.5`` double-rounding — so the cents
     it folds equal ``functions/money.py:money_round_units`` on exact
-    ties, one-ULP near-ties, and both signs (the r13/r14 divergence
-    shapes). The identity test pins this, not just the argument.
+    ties, one-ULP near-ties, and both signs (the shapes where pandas'
+    half-to-even and floor(x+0.5) diverge). The identity test pins this,
+    not just the argument.
 
     Reach for ``streaming_stateful_counters`` (Arrow) only when the fold
     is NOT expressible natively: conditional state resets, multi-field
@@ -294,7 +298,7 @@ def streaming_counters_native(
     param the Arrow form carries: recovery of the native HashAggregate
     state store is probed, not argued — st3_native_restart_mid_wave in
     tools/streaming_hostile_sim.py stops the query after batch 1 and
-    restarts it on the same checkpoint (r16 verdict item 2).
+    restarts it on the same checkpoint.
     """
     ev = source if source is not None else stream_events(spark, sf_dir)
     agg = ev.groupBy("user_id").agg(
@@ -353,6 +357,9 @@ def streaming_click_purchase_join(
     return _run_to_memory(joined, "append", checkpoint)
 
 
+_EMPTY_RELATION_RULE = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+
+
 def _checkpointed_state_pipeline(
     spark: SparkSession,
     stream: DataFrame,
@@ -366,14 +373,21 @@ def _checkpointed_state_pipeline(
 
     Each micro-batch applies ``apply_fn(batch_df, current_inventory)`` and
     writes the post-state to a fresh per-epoch parquet target; the next
-    batch reads it back. The state table never rides through the driver
-    (the old ``collect()``/``createDataFrame`` carry was a driver OOM at
-    scale), lineage is cut at every epoch (the read is a fresh scan, not a
-    plan stacked on all previous batches), and the epoch just consumed is
+    batch reads it back. The state table never rides through the driver,
+    lineage is cut at every epoch (the read is a fresh scan, not a plan
+    stacked on all previous batches), and the epoch just consumed is
     deleted after its successor is durably written — bounded storage, ≤ 2
     epochs live at any instant. With Delta jars present the write/read pair
     collapses to ``MERGE INTO`` on one target table; the call sites are
     unchanged.
+
+    An empty micro-batch leaves the state as it was. Its emptiness is
+    observed on the epoch write itself (a row count collected by the write
+    job), so no batch pays a separate emptiness job; an empty batch's
+    written post-state is discarded before it becomes an epoch. The count
+    is registered on the micro-batch's session, so ``apply_fn`` must root
+    its result on the batch (e.g. ``deltas.join(inventory, ..., "right")``),
+    not on the inventory, which may belong to the caller's session.
 
     ``checkpoint_dir``: a Structured Streaming ``checkpointLocation``.
     With it, source offsets are committed durably — a RESTARTED run over
@@ -403,22 +417,24 @@ def _checkpointed_state_pipeline(
     import shutil
     import tempfile
 
+    from pyspark.sql import Observation
+
     if state_dir is None:
         state_dir = tempfile.mkdtemp(prefix="dtm_state_")
-    # Lineage binding (advice, round 6): the replay guard below keys on
-    # epoch ids, and epoch ids are only unique WITHIN one checkpoint
-    # lineage — a caller who starts a NEW checkpoint_dir over a surviving
-    # state_dir restarts at epoch 0, and a leftover epoch_0/_SUCCESS from
-    # the old lineage would be loaded as if it were this run's first
-    # batch (silent swallow). The state_dir is therefore stamped with the
-    # checkpoint path it belongs to; a mismatch is refused loudly — the
-    # caller must either reuse the matching checkpoint (a genuine restart)
-    # or point at a fresh/empty state_dir (a genuine new job).
+    # Lineage binding: the replay guard below keys on epoch ids, and epoch
+    # ids are only unique WITHIN one checkpoint lineage — a caller who
+    # starts a NEW checkpoint_dir over a surviving state_dir restarts at
+    # epoch 0, and a leftover epoch_0/_SUCCESS from the old lineage would
+    # be loaded as if it were this run's first batch (silent swallow). The
+    # state_dir is therefore stamped with the checkpoint path it belongs
+    # to; a mismatch is refused loudly — the caller must either reuse the
+    # matching checkpoint (a genuine restart) or point at a fresh/empty
+    # state_dir (a genuine new job).
     if checkpoint_dir is not None:
         marker = os.path.join(state_dir, "_lineage")
-        # realpath, not abspath (advice, round 7): the same logical
-        # checkpoint reached via a symlink or a different cwd-relative
-        # spelling across restarts must not read as a foreign lineage
+        # realpath, not abspath: the same logical checkpoint reached via a
+        # symlink or a different cwd-relative spelling across restarts must
+        # not read as a foreign lineage
         lineage = os.path.realpath(checkpoint_dir)
         if os.path.exists(marker):
             with open(marker) as fh:
@@ -428,8 +444,7 @@ def _checkpointed_state_pipeline(
                 # dirs whose ids would collide with the new lineage's).
                 # A stamped-but-empty state_dir — e.g. a run that died
                 # before its first batch committed — carries no replay
-                # hazard, so rebinding it to the new lineage is safe
-                # (advice, round 7).
+                # hazard, so rebinding it to the new lineage is safe.
                 has_epochs = any(
                     d.startswith("epoch_") for d in os.listdir(state_dir)
                 )
@@ -460,10 +475,9 @@ def _checkpointed_state_pipeline(
             with open(marker, "w") as fh:
                 fh.write(lineage)
     state = {"inventory": inventory, "epoch_path": None}
+    batch_rows = F.count(F.lit(1)).alias("rows")
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         path = os.path.join(state_dir, f"epoch_{epoch_id}")
         # idempotent replay guard: foreachBatch is at-least-once — after
         # a crash between the write below and the offset commit, Spark
@@ -474,24 +488,39 @@ def _checkpointed_state_pipeline(
         # to the overwrite. ONLY with a durable checkpoint: epoch ids are
         # unique within one checkpoint lineage — without one, every run
         # restarts at epoch 0, and a leftover state_dir would silently
-        # swallow a fresh run's batches (review, late r6). The _lineage
-        # stamp above guarantees the dirs seen here belong to THIS
-        # checkpoint lineage, so a _SUCCESS epoch really is a replay.
+        # swallow a fresh run's batches. The _lineage stamp above
+        # guarantees the dirs seen here belong to THIS checkpoint lineage,
+        # so a _SUCCESS epoch really is a replay.
         if checkpoint_dir is not None and os.path.exists(
             os.path.join(path, "_SUCCESS")
         ):
             state["inventory"] = spark.read.parquet(path)
             state["epoch_path"] = path
             return
-        post = apply_fn(batch_df, state["inventory"])
+        # AQE would drop a branch whose shuffle came out empty from the
+        # final plan, and the row-count observation in it with that
+        # branch; this session is the stream's own clone
+        batch_df.sparkSession.conf.set(
+            "spark.sql.adaptive.optimizer.excludedRules", _EMPTY_RELATION_RULE
+        )
+        seen = Observation()
+        post = apply_fn(batch_df.observe(seen, batch_rows), state["inventory"])
+        if post.sparkSession is not batch_df.sparkSession:
+            # the observation completes only for a query of the session it
+            # was registered on; a post-state rooted on the inventory (the
+            # caller's session) would leave `seen.get` waiting forever
+            raise ValueError("apply_fn must root its result on the micro-batch")
         # write-aside + rename, NEVER overwrite `path` in place: the
         # current inventory may be a lazy scan OF `path` itself (an
         # uncheckpointed rerun reuses epoch ids, and the resumed caller
         # passes the previous post-state) — an in-place overwrite deletes
-        # the very files the computation is reading mid-job (review,
-        # late r6: FAILED_READ_FILE repro'd)
+        # the very files the computation is reading mid-job
+        # (FAILED_READ_FILE)
         tmp = path + "__tmp"
         post.write.mode("overwrite").parquet(tmp)
+        if seen.get["rows"] == 0:
+            shutil.rmtree(tmp, ignore_errors=True)
+            return
         prev = state["epoch_path"]
         if os.path.exists(path):
             shutil.rmtree(path, ignore_errors=True)
@@ -551,20 +580,23 @@ def streaming_order_pipeline(
     state_dir: str | None = None,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """§3.1 as a stream: foreachBatch applies the batch order pipeline per
-    micro-batch and MERGEs the post-state into a parquet-checkpointed
+    """§3.1 as a stream: foreachBatch applies the order pipeline's
+    post-state per micro-batch and MERGEs it into a parquet-checkpointed
     target (stand-in for a Delta ACID MERGE sink — Delta jars absent in v1).
+    The plan's expressions are built once per stream (``OrderExprs``); a
+    micro-batch builds only its DataFrame steps.
 
     Returns the final inventory post-state after all batches (a lazy scan
     of the last epoch's parquet checkpoint — never driver-materialized).
     """
-    from ..plans.order_pipeline import order_webhook_pipeline
+    from ..plans.order_pipeline import OrderExprs, order_post_state
 
+    exprs = OrderExprs()
     return _checkpointed_state_pipeline(
         spark,
         webhooks_stream,
         inventory,
-        lambda batch, inv: order_webhook_pipeline(batch, inv).updated_inventory,
+        lambda batch, inv: order_post_state(batch, inv, exprs),
         state_dir,
         checkpoint_dir,
     )

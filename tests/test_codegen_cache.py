@@ -7,14 +7,21 @@ A repeated query round or a later micro-batch that adds to it means the
 cache is too small for the working set, or an operator put a per-call value
 into generated code. The micro-batch state re-read is checked here too: it
 pins the post-state schema, so it starts no schema-inference job.
+
+A micro-batch has a budget too: the Spark jobs it starts and the py4j
+round trips its ``foreachBatch`` call makes. Both are fixed costs paid per
+batch whatever its size, so a change that adds one shows up on every
+batch of every stream.
 """
 
 import pyspark.sql.types as T
 import pytest
+from py4j.clientserver import ClientServerConnection
+from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
 from pyspark.sql import DataFrameReader
+from pyspark.sql.streaming.readwriter import DataStreamWriter
 
 from data_transform_make_spark import corpus
-from data_transform_make_spark.plans import order_pipeline
 from data_transform_make_spark.streaming.pipelines import streaming_order_pipeline
 from perfbench.run import ORDER_ETL_QUERIES
 
@@ -47,6 +54,7 @@ INVENTORY = T.StructType(
     ]
 )
 N_FILES = 4
+RELEASE = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
 
 
 def _compiles(spark) -> int:
@@ -76,8 +84,9 @@ def test_repeated_order_etl_round_compiles_nothing(spark, sf_dir):
 @pytest.fixture(scope="module")
 def stream_run(spark, tmp_path_factory):
     """One webhook stream of N_FILES micro-batches through
-    ``streaming_order_pipeline``, recording the compile count as each batch
-    starts and every epoch-state read the pipeline makes."""
+    ``streaming_order_pipeline``. Each micro-batch is recorded at the
+    ``foreachBatch`` callback's start and end: compile count, jobs started
+    and py4j round trips; so is every epoch-state read the pipeline makes."""
     tmp = tmp_path_factory.mktemp("codegen_stream")
     src = str(tmp / "webhooks")
     for i in range(N_FILES):
@@ -90,25 +99,52 @@ def stream_run(spark, tmp_path_factory):
         [("I1", "Tote", 100, 0), ("I2", "Duffel", 50, 1)], INVENTORY
     ).coalesce(1).write.parquet(inv_path)
 
-    batch_start, reads = [], []
-    real_pipeline = order_pipeline.order_webhook_pipeline
+    batches, reads, calls = [], [], [0]
+    real_send = ClientServerConnection.send_command
+    real_foreach_batch = DataStreamWriter.foreachBatch
     real_parquet = DataFrameReader.parquet
 
-    def counting_pipeline(batch, inventory):
-        batch_start.append(_compiles(spark))
-        return real_pipeline(batch, inventory)
+    def counting_send(self, command):
+        # a proxy release frees a JVM object that Python garbage-collected,
+        # whenever the collector happens to run: not this batch's work
+        if not command.startswith(RELEASE):
+            calls[0] += 1
+        return real_send(self, command)
+
+    def measured_foreach_batch(self, func):
+        def measured(batch_df, epoch_id):
+            own.update(jobs=0, calls=0)
+            compiles, jobs = _compiles(spark), _jobs_started(spark)
+            before = calls[0]
+            func(batch_df, epoch_id)
+            used = calls[0] - before - own["calls"]
+            jobs = _jobs_started(spark) - jobs - own["jobs"]
+            batches.append({"start_compiles": compiles, "jobs": jobs, "calls": used})
+
+        return real_foreach_batch(self, measured)
+
+    # the jobs and round trips of the recording below, which a batch's
+    # budget leaves out: the replay read infers its schema with a job
+    own = {"jobs": 0, "calls": 0}
 
     def recording_parquet(self, *paths, **kw):
+        entered = calls[0]
         jobs = _jobs_started(spark)
+        read_from = calls[0]
         df = real_parquet(self, *paths, **kw)
+        read_calls = calls[0] - read_from
         jobs = _jobs_started(spark) - jobs
         if any("epoch_" in p for p in paths):
+            replay_from = _jobs_started(spark)
             replay = real_parquet(spark.read, *paths)
             reads.append({"jobs": jobs, "schema": df.schema, "replay": replay.schema})
+            own["jobs"] += _jobs_started(spark) - replay_from
+        own["calls"] += calls[0] - entered - read_calls
         return df
 
     with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(order_pipeline, "order_webhook_pipeline", counting_pipeline)
+        mp.setattr(ClientServerConnection, "send_command", counting_send)
+        mp.setattr(DataStreamWriter, "foreachBatch", measured_foreach_batch)
         mp.setattr(DataFrameReader, "parquet", recording_parquet)
         stream = (
             spark.readStream.schema(WEBHOOKS)
@@ -119,11 +155,11 @@ def stream_run(spark, tmp_path_factory):
             spark, stream, spark.read.parquet(inv_path), state_dir=str(tmp / "state")
         )
         end = _compiles(spark)
-    return {"batch_start": batch_start, "end": end, "reads": reads}
+    return {"batches": batches, "end": end, "reads": reads}
 
 
 def test_stream_batches_after_the_first_compile_nothing(stream_run):
-    marks = stream_run["batch_start"] + [stream_run["end"]]
+    marks = [b["start_compiles"] for b in stream_run["batches"]] + [stream_run["end"]]
     assert len(marks) == N_FILES + 1
     per_batch = [b - a for a, b in zip(marks, marks[1:])]
     assert per_batch[1:] == [0] * (N_FILES - 1), per_batch
@@ -141,3 +177,19 @@ def test_epoch_state_reread_matches_replay_read(stream_run):
     for r in stream_run["reads"]:
         pinned = [(f.name, f.dataType) for f in r["schema"]]
         assert pinned == [(f.name, f.dataType) for f in r["replay"]]
+
+
+def test_micro_batch_runs_at_most_four_jobs(stream_run):
+    # lines shuffle, stock shuffle, inventory shuffle, epoch write
+    jobs = [b["jobs"] for b in stream_run["batches"]]
+    assert len(jobs) == N_FILES
+    assert max(jobs) <= 4, jobs
+
+
+def test_micro_batch_plan_takes_a_fixed_handful_of_round_trips(stream_run):
+    # every py4j round trip of a micro-batch's foreachBatch call: building
+    # the plan, the epoch write and the state re-read. Building the §3.1
+    # plan from fresh Column expressions took ~860 per batch.
+    calls = [b["calls"] for b in stream_run["batches"]]
+    assert len(calls) == N_FILES
+    assert max(calls) <= 172, calls

@@ -114,3 +114,91 @@ def test_running_stock_admission(spark):
     assert post.general_stock_qty == 4
     assert post.qty_office == 6
     assert result.rejects.count() == 2
+
+
+def _post(result):
+    return sorted(tuple(r) for r in result.updated_inventory.collect())
+
+
+def test_unknown_inventory_id_is_rejected_and_adds_no_row(spark):
+    """A line for an id the inventory lacks has stock 0: its qty never
+    fits, so it is rejected and the post-state gains no row for it."""
+    webhooks = spark.createDataFrame(
+        [(1, "Approved", [("I9", "Ghost", "2"), ("I1", "Tote", "1")])], WEBHOOKS
+    )
+    inventory = spark.createDataFrame([("I1", "Tote", 10, 1)], INVENTORY)
+    result = order_webhook_pipeline(webhooks, inventory)
+    assert _post(result) == [("I1", "Tote", 9, 2)]
+    assert [(r.webhook_id, r.inventory_id, r.reject_reason) for r in result.rejects.collect()] == [
+        (1, "I9", "insufficient_stock")
+    ]
+    assert [(r.webhook_id, r.inventory_id, r.qty) for r in result.applied_lines.collect()] == [
+        (1, "I1", 1)
+    ]
+
+
+def test_negative_qty_returns_stock(spark):
+    """parseInt keeps the sign: a '-3' line is valid (non-zero), lowers the
+    running sum and moves 3 back from office to stock, so the next
+    webhook's 12 fits a stock of 10: 10 + 3 - 12 = 1, office 1 - 3 + 12."""
+    webhooks = spark.createDataFrame(
+        [
+            (1, "Approved", [("I1", "Tote", "-3")]),
+            (2, "Approved", [("I1", "Tote", "12")]),
+        ],
+        WEBHOOKS,
+    )
+    inventory = spark.createDataFrame([("I1", "Tote", 10, 1)], INVENTORY)
+    result = order_webhook_pipeline(webhooks, inventory)
+    assert _post(result) == [("I1", "Tote", 1, 10)]
+    assert result.rejects.count() == 0
+
+
+def test_key_hit_by_several_webhooks_runs_out_mid_batch(spark):
+    """Running sums per id in (webhook, line) order: I1 4, 11, 13 against
+    stock 10 and I2 5, 6 against stock 5. A rejected line still counts
+    toward the running sum, so wh3's 2 is rejected although 4 + 2 fits."""
+    webhooks = spark.createDataFrame(
+        [
+            (1, "Approved", [("I1", "Tote", "4"), ("I2", "Duffel", "5")]),
+            (2, "Approved", [("I1", "Tote", "7")]),
+            (3, "Approved", [("I1", "Tote", "2")]),
+            (4, "Approved", [("I2", "Duffel", "1")]),
+        ],
+        WEBHOOKS,
+    )
+    inventory = spark.createDataFrame(
+        [("I1", "Tote", 10, 0), ("I2", "Duffel", 5, 0)], INVENTORY
+    )
+    result = order_webhook_pipeline(webhooks, inventory)
+    assert _post(result) == [("I1", "Tote", 6, 4), ("I2", "Duffel", 0, 5)]
+    assert sorted((r.webhook_id, r.inventory_id) for r in result.rejects.collect()) == [
+        (2, "I1"),
+        (3, "I1"),
+        (4, "I2"),
+    ]
+    assert sorted((r.webhook_id, r.inventory_id) for r in result.applied_lines.collect()) == [
+        (1, "I1"),
+        (1, "I2"),
+    ]
+
+
+def test_duplicate_inventory_id_admits_against_smallest_stock(spark):
+    """Two inventory rows share I1 (stocks 10 and 4). Each line is admitted
+    once, against the smallest stock of the id (4): running sums 3, 5, so
+    wh2's 2 is rejected. The id's delta then updates every row that
+    carries it, as a MERGE updates every target row its key matches."""
+    webhooks = spark.createDataFrame(
+        [
+            (1, "Approved", [("I1", "Tote", "3")]),
+            (2, "Approved", [("I1", "Tote", "2")]),
+        ],
+        WEBHOOKS,
+    )
+    inventory = spark.createDataFrame(
+        [("I1", "Tote", 10, 0), ("I1", "Tote", 4, 1)], INVENTORY
+    )
+    result = order_webhook_pipeline(webhooks, inventory)
+    assert _post(result) == [("I1", "Tote", 1, 4), ("I1", "Tote", 7, 3)]
+    assert [(r.webhook_id, r.inventory_id) for r in result.rejects.collect()] == [(2, "I1")]
+    assert [(r.webhook_id, r.qty) for r in result.applied_lines.collect()] == [(1, 3)]

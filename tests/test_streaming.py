@@ -682,3 +682,126 @@ def test_replay_guard_inert_without_checkpoint(spark, tmp_path):
     )
     r2 = {r.inventory_id: r for r in post2.collect()}
     assert (r2["I1"].general_stock_qty, r2["I1"].qty_office) == (3, 7)
+
+
+# An empty micro-batch must leave the state exactly as it was: an empty
+# file between two batches changes nothing, and a stream whose only batch
+# is empty returns the inventory it was given (NULL counters and input
+# types included). A non-empty batch reads NULL counters as 0 and widens
+# them to bigint.
+PROCESS_EVENTS = T.StructType(
+    [
+        T.StructField("inventory_id", T.StringType()),
+        T.StructField("status", T.StringType()),
+        T.StructField("previous_status", T.StringType()),
+    ]
+)
+PROCESS_COUNTERS = (
+    "qty_office",
+    "qty_warehouse",
+    "qty_art",
+    "qty_embroidery",
+    "qty_sewer",
+    "qty_completed",
+)
+PROCESS_INV = T.StructType(
+    [T.StructField("inventory_id", T.StringType())]
+    + [T.StructField(c, T.IntegerType()) for c in PROCESS_COUNTERS]
+)
+
+
+def _one_file_per_batch(spark, src, batches, schema):
+    """Write each batch as one parquet file (an empty batch as an empty
+    file), with increasing modification times: the file source takes
+    files in that order, one per micro-batch."""
+    import os
+
+    os.makedirs(src)
+    for k, rows in enumerate(batches):
+        out = f"{src}_part{k}"
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(out)
+        (part,) = [f for f in os.listdir(out) if f.endswith(".parquet")]
+        path = os.path.join(src, f"batch-{k:03d}.parquet")
+        os.rename(os.path.join(out, part), path)
+        os.utime(path, (1_700_000_000 + k, 1_700_000_000 + k))
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+
+
+def _state(post):
+    return sorted(tuple(r) for r in post.collect()), [t for _, t in post.dtypes]
+
+
+ORDER_INV_ROWS = [
+    ("I1", "Tote", 10, 0),
+    ("I2", "Duffel", 5, None),
+    ("I3", "Roller", None, 2),
+]
+
+
+def test_streaming_order_pipeline_empty_file_between_batches(spark, tmp_path):
+    stream = _one_file_per_batch(
+        spark,
+        str(tmp_path / "webhooks"),
+        [[(1, "Approved", [("I1", "Tote", "3")])], [], [(2, "Approved", [("I1", "Tote", "4")])]],
+        WEBHOOKS,
+    )
+    inventory = spark.createDataFrame(ORDER_INV_ROWS, INVENTORY)
+    post = streaming_order_pipeline(spark, stream, inventory, state_dir=str(tmp_path / "s"))
+    assert _state(post) == (
+        [("I1", "Tote", 3, 7), ("I2", "Duffel", 5, 0), ("I3", "Roller", 0, 2)],
+        ["string", "string", "bigint", "bigint"],
+    )
+
+
+def test_streaming_order_pipeline_only_batch_empty(spark, tmp_path):
+    stream = _one_file_per_batch(spark, str(tmp_path / "webhooks"), [[]], WEBHOOKS)
+    inventory = spark.createDataFrame(ORDER_INV_ROWS, INVENTORY)
+    post = streaming_order_pipeline(spark, stream, inventory, state_dir=str(tmp_path / "s"))
+    assert _state(post) == (
+        sorted(ORDER_INV_ROWS, key=lambda r: r[0]),
+        ["string", "string", "int", "int"],
+    )
+
+
+PROCESS_INV_ROWS = [("I1", 5, 0, 0, 0, 0, 0), ("I2", None, 1, 0, 0, 0, 0)]
+
+
+def test_streaming_process_pipeline_empty_file_between_batches(spark, tmp_path):
+    from data_transform_make_spark.streaming.pipelines import streaming_process_pipeline
+
+    stream = _one_file_per_batch(
+        spark,
+        str(tmp_path / "events"),
+        [[("I1", "Warehouse", "Office")], [], [("I1", "Complete", "Warehouse")]],
+        PROCESS_EVENTS,
+    )
+    inventory = spark.createDataFrame(PROCESS_INV_ROWS, PROCESS_INV)
+    post = streaming_process_pipeline(spark, stream, inventory, state_dir=str(tmp_path / "s"))
+    # I1: office 5-1, warehouse 0+1-1, completed +1; I2's NULL office reads 0
+    assert _state(post) == (
+        [("I1", 4, 0, 0, 0, 0, 1), ("I2", 0, 1, 0, 0, 0, 0)],
+        ["string"] + ["bigint"] * 6,
+    )
+
+
+def test_streaming_process_pipeline_only_batch_empty(spark, tmp_path):
+    from data_transform_make_spark.streaming.pipelines import streaming_process_pipeline
+
+    stream = _one_file_per_batch(spark, str(tmp_path / "events"), [[]], PROCESS_EVENTS)
+    inventory = spark.createDataFrame(PROCESS_INV_ROWS, PROCESS_INV)
+    post = streaming_process_pipeline(spark, stream, inventory, state_dir=str(tmp_path / "s"))
+    assert _state(post) == (PROCESS_INV_ROWS, ["string"] + ["int"] * 6)
+
+
+def test_streaming_order_pipeline_batch_with_nothing_to_apply(spark, tmp_path):
+    # a non-empty batch is applied even when no line survives: its NULL
+    # counters read as 0, as after any other non-empty batch
+    stream = _one_file_per_batch(
+        spark, str(tmp_path / "webhooks"), [[(1, "Pending", [("I1", "Tote", "3")])]], WEBHOOKS
+    )
+    inventory = spark.createDataFrame(ORDER_INV_ROWS, INVENTORY)
+    post = streaming_order_pipeline(spark, stream, inventory, state_dir=str(tmp_path / "s"))
+    assert _state(post) == (
+        [("I1", "Tote", 10, 0), ("I2", "Duffel", 5, 0), ("I3", "Roller", 0, 2)],
+        ["string", "string", "bigint", "bigint"],
+    )

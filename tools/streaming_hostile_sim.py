@@ -483,8 +483,8 @@ def run() -> list:
             st3_latest,
             oracles["st3_stream_stateful_counters"],
         )
-        # st3 NATIVE (r17, closing the r16 verdict item 2): the shipped
-        # PRODUCTION DEFAULT streaming_counters_native is the one
+        # st3 NATIVE: streaming_counters_native (st3's fold as a native
+        # aggregation) is the one
         # state-store shape the wave above did not restart — its state is
         # a native update-mode HashAggregate (no Arrow/Python worker),
         # recovery nominally Spark-guaranteed, but this repo's standard is
